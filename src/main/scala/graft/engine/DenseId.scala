@@ -1,8 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.LongType
 
 import graft.Checkpoints.DatasetCheckpointOps
 
@@ -10,45 +9,26 @@ import graft.Checkpoints.DatasetCheckpointOps
   * equivalent of Postgres `serial` in the reference's mapping tables
   * (`generation.py:103`; id-range golden `tests/test_integration.py:963-971`).
   *
-  * A single global `row_number()` window would funnel every row through one
-  * partition — fine at fixture scale, fatal at 100 TB. Instead: range-partition
-  * on the ordering keys, number rows within each partition, then add
-  * per-partition offsets computed from the (tiny, ≤ #partitions) count vector.
-  * One extra job over a keys-only cached projection; no single-partition
-  * shuffle anywhere (SURVEY.md §7.4).
+  * A global sort range-partitions the rows on the ordering keys, so no
+  * shuffle funnels through a single partition (SURVEY.md §7.4), and
+  * `zipWithIndex` numbers the sorted rows: one job counts each partition,
+  * and the ids are the partition's offset plus the row's position. Both
+  * that count and the eager checkpoint read the same sort shuffle output,
+  * so the ids are computed once, and the checkpoint keeps them: every
+  * later consumer (all of the table's column rules, other tables' FK
+  * remaps) reads the same blocks, and a lost block fails loudly instead of
+  * renumbering through a resampled range partitioning. Rows that tie on
+  * `order` may swap places between runs; when the order covers every
+  * column (as the engine's spines do), tied rows are identical, so no id
+  * changes.
   */
 object DenseId {
 
   def withDenseId(df: DataFrame, idCol: String, order: Seq[Column]): DataFrame = {
-    val parted = df
-      .repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      // cache: the count job below and the final plan must see identical
-      // range boundaries and partition numbering
-      .persist()
-
-    val counts = parted.groupBy("__pid").count().collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val rowsBefore = counts.map(_._2).scanLeft(0L)(_ + _) // zip below drops the total
-    val offsetsDf = df.sparkSession.createDataFrame(
-      counts.map(_._1).zip(rowsBefore).toSeq)
-      .toDF("__pid", "__before")
-
-    val local = Window.partitionBy(col("__pid")).orderBy(order: _*)
-    // Eager localCheckpoint, not persist: (a) it materializes the assigned
-    // ids ONCE — every later consumer (all of the table's column rules,
-    // other tables' FK remaps) reads the same blocks, and a lost block
-    // fails loudly instead of silently renumbering ids through a
-    // recomputed (resampled) range partitioning; (b) the blocks are
-    // released by the ContextCleaner when the spine is dropped, instead of
-    // pinning CacheManager memory for the session's lifetime.
-    val out = parted
-      .join(broadcast(offsetsDf), Seq("__pid"), "left")
-      .withColumn(idCol, row_number().over(local).cast("long") + coalesce(col("__before"), lit(0L)))
-      .drop("__pid", "__before")
+    val sorted = df.sort(order: _*)
+    val numbered = sorted.rdd.zipWithIndex().map { case (row, i) => Row.fromSeq(row.toSeq :+ (i + 1)) }
+    df.sparkSession
+      .createDataFrame(numbered, sorted.schema.add(idCol, LongType, nullable = false))
       .graftCheckpoint()
-    parted.unpersist()
-    out
   }
 }

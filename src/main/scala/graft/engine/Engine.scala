@@ -2,7 +2,7 @@ package graft.engine
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints.DatasetCheckpointOps
@@ -13,25 +13,26 @@ import graft.rules._
   *
   * The reference compiles rules to a PostgreSQL script
   * (`omop_etl/generation.py`); this engine expresses the same semantics
-  * directly as Catalyst logical plans. Statement shapes map as:
+  * directly as Catalyst logical plans. Each ETL phase is one plan shape:
   *
   *  - mapping-table build (A14) → per-source natural-key SELECT →
   *    `unionByName(allowMissingColumns)` in declaration order → dense
-  *    surrogate ids ([[DenseId]]).
+  *    surrogate ids ([[DenseId]]: one sort, one `zipWithIndex`).
   *  - `UPDATE … FROM` per column (A15) → rule SELECT (spine ⋈ sources,
   *    conjunctive WHERE — Catalyst turns filtered cross joins into real
-  *    joins) → collapse to one row per id → left-join overlay with a
-  *    matched-marker: matched rows take the new value (even when NULL,
-  *    matching UPDATE semantics), unmatched rows keep the old.
+  *    joins); all of a table's rule SELECTs fold in ONE aggregate and join
+  *    the target ONCE ([[Overlay]]): matched rows take the last rule's
+  *    value (even when NULL, matching UPDATE semantics), unmatched rows
+  *    keep the old.
   *  - FK remap (A16) → join the referenced spine on its natural-key column,
   *    non-null-gated; emit its surrogate id.
-  *  - constants (A17) → unconditional `withColumn(lit)`.
+  *  - constants (A17) → the column's value before its keyed rules apply.
   *  - scripts/temp tables (A8/A12/A19) → `spark.sql` + temp views; plpgsql
   *    function scripts resolve against a caller-supplied UDF registry
   *    (SURVEY.md §7.6).
   *
   * Two-phase schedule (`__main__.py:81-88`): all dependencies, then every
-  * table's initialization (spines materialized + cached — each spine is
+  * table's initialization (spines materialized once — each spine is
   * reused by all of its table's column rules and by other tables'
   * `references`), then every table's column updates.
   */
@@ -232,88 +233,27 @@ class Engine(
   /** Phase-2 for one table: apply its column rules in declaration order
     * (order is semantic — last write wins; SURVEY.md §7.5).
     *
-    * Scale shape: the naive translation left-joins the full target once per
-    * column rule — C shuffles of the biggest table. Instead, rules are
-    * folded per column (later-rule-wins = rank by rule index over the
-    * union of the per-rule outputs — these are keyed rule-output frames,
-    * small relative to the target), the per-column finals are outer-joined
-    * on the surrogate id, and the target is joined ONCE. A constant rule
-    * (A17) overwrites every row, so it kills all earlier rules for its
-    * column and becomes the column's default value. Falls back to the
-    * sequential overlay when a column's rules produce incompatible value
-    * types (the ranked union needs one type; the reference relies on the
-    * target DDL cast there).
+    * A constant rule (A17) overwrites every row, so it hides every earlier
+    * rule for its column and becomes the value unmatched rows take; only
+    * the keyed rules after it are compiled. [[Overlay]] then applies every
+    * column in one plan, so the target is joined once however many rules
+    * the table has.
     */
   def process(rule: TableRule): Unit = {
-    val pkName = rule.primaryKey.name
-
-    // column name → (rules with global index), first-appearance order
-    val indexed = rule.columns.zipWithIndex.filter(!_._1.isInstanceOf[DisabledColumn])
-    val colOrder = indexed.map(_._1.name).distinct
-    val byColumn = colOrder.map(c => c -> indexed.filter(_._1.name == c))
-
-    case class ColPlan(name: String, default: Option[Any], folded: Option[DataFrame])
-
-    val plans = byColumn.map { case (colName, rs) =>
-      val lastConstIdx = rs.collect { case (c: ConstantColumn, i) => i }.lastOption
-      val default = lastConstIdx.map(i =>
-        rs.collect { case (c: ConstantColumn, `i`) => c.constant }.head)
-      val keyed = rs.collect {
-        case (tc: TargetColumn, i) if lastConstIdx.forall(i > _) => (tc, i)
-      }
-      val perRule = keyed.map { case (tc, i) =>
-        columnRuleSelect(rule, tc).dropDuplicates("__id")
-          .withColumn("__ridx", lit(i))
-      }
-      val types = perRule.map(_.schema("__val").dataType).distinct
-      if (perRule.isEmpty) ColPlan(colName, default, None)
-      else if (types.size > 1) {
-        // incompatible rule value types → sequential overlay fallback
-        // (reuses the already-analyzed perRule frames: no second
-        // columnRuleSelect pass, no duplicate statementLog entries)
-        var t = targets(rule.name)
-        default.foreach(v => t = t.withColumn(colName, lit(v)))
-        perRule.foreach { f =>
-          t = Overlay(t, pkName, colName, f.select("__id", "__val"))
-        }
-        targets(rule.name) = t
-        ColPlan(colName, None, None)
-      } else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__id")).orderBy(col("__ridx").desc)
-        val folded = perRule.reduce(_.unionByName(_))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-          .select(col("__id"), col("__val").as(s"__val_$colName"),
-            lit(1).as(s"__m_$colName"))
-        ColPlan(colName, default, Some(folded))
-      }
+    val enabled = rule.columns.filterNot(_.isInstanceOf[DisabledColumn])
+    val columns = enabled.map(_.name).distinct.map { name =>
+      val rs = enabled.filter(_.name == name)
+      val lastConst = rs.lastIndexWhere(_.isInstanceOf[ConstantColumn])
+      Overlay.Column(name,
+        rs.lift(lastConst).collect { case c: ConstantColumn => c.constant },
+        rs.drop(lastConst + 1).collect { case tc: TargetColumn => columnRuleSelect(rule, tc) })
     }
-
-    val withFinals = plans.filter(_.folded.isDefined)
-    val combined = withFinals.map(_.folded.get)
-      .reduceOption(_.join(_, Seq("__id"), "full_outer"))
-
-    var target = targets(rule.name)
-    combined match {
-      case Some(c) =>
-        target = target.join(c, target(pkName) === c("__id"), "left")
-      case None => ()
-    }
-    plans.foreach { p =>
-      if (p.folded.isDefined) {
-        val prior: org.apache.spark.sql.Column = p.default.map(lit)
-          .getOrElse(if (target.columns.contains(p.name)) col(p.name) else lit(null))
-        target = target.withColumn(p.name,
-          when(col(s"__m_${p.name}").isNotNull, col(s"__val_${p.name}")).otherwise(prior))
-      } else if (p.default.isDefined) {
-        // constants-only column (or fallback already applied its default)
-        target = target.withColumn(p.name, lit(p.default.get))
+    targets(rule.name) =
+      try Overlay(targets(rule.name), rule.primaryKey.name, columns)
+      catch {
+        case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(s"rule '${rule.name}', ${e.getMessage}", e)
       }
-    }
-    targets(rule.name) = target
-      .drop("__id")
-      .drop(withFinals.flatMap(p => Seq(s"__val_${p.name}", s"__m_${p.name}")): _*)
   }
 
   /** Build `SELECT <spine id> AS __id, <expr> AS __val FROM mapping ⋈ rule
@@ -418,26 +358,68 @@ class Engine(
 object Engine {
   /** One generated SQL statement, attributed to the rule that emitted it. */
   case class Statement(rule: String, kind: String, sql: String)
+
+  /** A statement ledger as a readable script: each statement under a
+    * `-- <rule>: <kind>` header, `;`-terminated, in execution order.
+    */
+  def render(statements: Seq[Statement]): String =
+    statements.map(s => s"-- ${s.rule}: ${s.kind}\n${s.sql.trim.stripSuffix(";")};\n")
+      .mkString("\n")
 }
 
 /** UPDATE…FROM as a left-join overlay (SURVEY.md §7.5). */
 object Overlay {
 
-  /** Overlay `ruleDf` (columns `__id`, `__val`) onto `target.colName`:
-    * matched rows take `__val` (including NULL — UPDATE sets the column
-    * unconditionally on match), unmatched rows keep their prior value.
-    * Multi-match collapses to one arbitrary row per id, mirroring Postgres
-    * UPDATE…FROM nondeterminism while keeping row counts stable.
+  /** One target column's updates. `rules` are keyed frames (`__id`,
+    * `__val`) in statement order; `default`, when set, is the value every
+    * row takes before them (a constant rule), otherwise rows start from
+    * the target's current value (NULL for a new column).
     */
-  def apply(target: DataFrame, pkName: String, colName: String, ruleDf: DataFrame): DataFrame = {
-    val collapsed = ruleDf
-      .dropDuplicates("__id")
-      .withColumn("__matched", lit(1))
-    val prior: org.apache.spark.sql.Column =
-      if (target.columns.contains(colName)) col(colName) else lit(null)
-    target
-      .join(collapsed, target(pkName) === collapsed("__id"), "left")
-      .withColumn(colName, when(col("__matched").isNotNull, col("__val")).otherwise(prior))
-      .drop("__id", "__val", "__matched")
+  case class Column(name: String, default: Option[Any], rules: Seq[DataFrame])
+
+  /** Apply `columns` to `target` (keyed by `pkName`) in one plan: every
+    * rule row becomes `(__id, __val_<col>, <rule index> AS __r_<col>)`, all
+    * of them are unioned, and one `groupBy(__id)` takes per column the value
+    * of the highest rule index (`max_by`). That is "later rule wins"; rows
+    * of other columns carry a NULL index and are skipped; an id matched
+    * several times by one rule keeps one of its values (Postgres
+    * UPDATE…FROM picks an arbitrary row too) and the row count stays
+    * stable. The fold joins the target once; a row matched for a column
+    * (`__r_<col>` non-NULL) takes the folded value even when it is NULL,
+    * as UPDATE sets the column unconditionally on match.
+    *
+    * A column's rule values are unioned, so they widen to one common type
+    * (bigint and double fold to double); types with none throw
+    * IllegalArgumentException naming the column.
+    */
+  def apply(target: DataFrame, pkName: String, columns: Seq[Column]): DataFrame = {
+    val keyed = columns.filter(_.rules.nonEmpty)
+    val perColumn = keyed.map { c =>
+      val tagged = c.rules.zipWithIndex.map { case (r, i) =>
+        r.select(col("__id"), col("__val").as(s"__val_${c.name}"), lit(i).as(s"__r_${c.name}"))
+      }
+      try tagged.reduce(_.unionByName(_))
+      catch {
+        case e: AnalysisException => throw new IllegalArgumentException(
+          s"column '${c.name}': rule values have no common type: ${e.getMessage}", e)
+      }
+    }
+    val joined = perColumn.reduceOption(_.unionByName(_, allowMissingColumns = true)) match {
+      case None => target
+      case Some(rows) =>
+        val aggs = keyed.flatMap { c =>
+          Seq(max_by(col(s"__val_${c.name}"), col(s"__r_${c.name}")).as(s"__val_${c.name}"),
+            max(s"__r_${c.name}").as(s"__r_${c.name}"))
+        }
+        val folded = rows.groupBy("__id").agg(aggs.head, aggs.tail: _*)
+        target.join(folded, target(pkName) === folded("__id"), "left").drop("__id")
+    }
+    columns.foldLeft(joined) { (t, c) =>
+      val prior = c.default.map(lit)
+        .getOrElse(if (t.columns.contains(c.name)) col(c.name) else lit(null))
+      t.withColumn(c.name,
+        if (c.rules.isEmpty) prior
+        else when(col(s"__r_${c.name}").isNotNull, col(s"__val_${c.name}")).otherwise(prior))
+    }.drop(keyed.flatMap(c => Seq(s"__val_${c.name}", s"__r_${c.name}")): _*)
   }
 }

@@ -71,15 +71,12 @@ object Etl {
     val stemOf: Map[String, String] = loaded.map { case (stem, r) => r.name -> stem }.toMap
     val out = Paths.get(outDir)
     if (!Files.exists(out)) Files.createDirectories(out)
-    def render(ss: Seq[Engine.Statement]): String =
-      ss.map(s => s"-- ${s.rule}: ${s.kind}\n${s.sql.trim.stripSuffix(";")};\n")
-        .mkString("\n")
     val log = engine.statementLog.toSeq
     if (oneFile)
-      Files.writeString(out.resolve("etl.sql"), render(log))
+      Files.writeString(out.resolve("etl.sql"), Engine.render(log))
     else
       log.groupBy(s => stemOf.getOrElse(s.rule, s.rule)).foreach { case (stem, ss) =>
-        Files.writeString(out.resolve(s"$stem.sql"), render(ss))
+        Files.writeString(out.resolve(s"$stem.sql"), Engine.render(ss))
       }
     targets
   }
@@ -234,9 +231,7 @@ object Api {
     try {
       configure(engine)
       engine.run(Seq(rule))
-      val script = engine.statementLog
-        .map(s => s"-- ${s.rule}: ${s.kind}\n${s.sql.trim.stripSuffix(";")};\n")
-        .mkString("\n")
+      val script = Engine.render(engine.statementLog.toSeq)
       val warnings = RequiredColumns.warnings(rule)
         .map(msg => Warning(Seq("body", "columns"), msg, "value_error"))
       Result(script, warnings)

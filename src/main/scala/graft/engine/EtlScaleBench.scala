@@ -1,29 +1,20 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.rules.{Rule, RuleParser}
-
-/** Scale evidence for the ETL engine path: replicate the validation corpus
-  * (`/root/reference/validation`, converted by tools/convert_corpus.py) N×
-  * Spark-side — each replica's join keys shifted into a private id space so
-  * every join stays referential and per-replica cardinalities equal the 1×
-  * corpus — then run the four Cerner→OMOP rules end-to-end through
-  * [[Etl.runDirectory]], plus a phase-instrumented pass (spine builds /
-  * overlay plan construction / target materialization) on a fresh
-  * [[Engine]].
+/** Scale inputs for the ETL engine path: replicate a table of the
+  * validation corpus (`src/test/resources/corpus`, converted by
+  * tools/convert_corpus.py) N× Spark-side, each replica's join keys shifted
+  * into a private id space so every join stays referential and
+  * per-replica cardinalities equal the 1× corpus.
   *
-  * Because replicas are self-contained, the replicated-spine targets must
-  * grow EXACTLY ×N vs a 1× baseline run (person, visit_occurrence,
-  * condition_occurrence; location grows by N× its address part only — the
+  * Because replicas are self-contained, the four Cerner→OMOP rules run on
+  * an N× corpus grow person, visit_occurrence and condition_occurrence
+  * EXACTLY ×N, and location by N× its address part only (the
   * facility/nurse-unit location codes are shared dimensions and stay
-  * constant). The invariant is asserted, so the reported timing cannot
-  * silently measure a broken join graph.
-  *
-  * Usage: `graft.engine.EtlScaleBench [factor] [corpusDir] [rulesDir]`;
-  * prints one JSON line.
+  * constant). The repo benchmark (`omopbench/`) runs that ×N ETL and
+  * checks the invariant.
   */
 object EtlScaleBench {
 
@@ -44,94 +35,5 @@ object EtlScaleBench {
     df.columns.filter(ShiftCols)
       .foldLeft(keyed)((d, c) => d.withColumn(c, col(c) + col("__replica") * lit(1e9)))
       .drop("__replica")
-  }
-
-  private def registerAll(e: Engine, spark: SparkSession, corpus: String, factor: Int): Unit = {
-    def withNullCol(df: DataFrame, name: String): DataFrame =
-      if (df.columns.contains(name)) df else df.withColumn(name, lit(null).cast("double"))
-    Seq("person", "encounter", "encntr_loc_hist", "diagnosis", "problem",
-      "address", "nomenclature").foreach { t =>
-      val df = spark.read.parquet(s"$corpus/cerner_$t.parquet")
-      val full = if (t == "encounter" || t == "encntr_loc_hist") withNullCol(df, "active_ind") else df
-      e.registerSource("cerner", t, replicate(full, factor))
-    }
-    e.registerSource("cerner", "code_value", spark.read.parquet(s"$corpus/cerner_code_value.parquet"))
-    Seq("concept", "concept_relationship").foreach(t =>
-      e.registerSource("omop", t, spark.read.parquet(s"$corpus/omop_$t.parquet")))
-    e.registerSource("omop", "vocabulary", spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("vocabulary_id", StringType)))))
-    Seq("facility_postcode", "person_ethnicity_concept").foreach(t =>
-      e.registerSource("external", t, spark.read.parquet(s"$corpus/external_$t.parquet")))
-  }
-
-  private def materialize(df: DataFrame): Long = {
-    df.write.format("noop").mode("overwrite").save()
-    df.count()
-  }
-
-  def main(args: Array[String]): Unit = {
-    val factor = args.headOption.map(_.toInt).getOrElse(10)
-    val corpus = args.lift(1).getOrElse("src/test/resources/corpus")
-    val rulesDir = args.lift(2).getOrElse("src/main/resources/validation")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def sec(t0: Long): Double = (System.nanoTime() - t0) / 1e9
-
-    // 1× baseline: the scale invariant's denominator, and a steady-state
-    // warmup so the timed pass measures the engine, not first-plan costs.
-    val base = Etl.runDirectory(spark, rulesDir, configure = registerAll(_, spark, corpus, 1))
-      .map { case (n, df) => n -> materialize(df) }
-
-    // headline: the public entry end-to-end at N×
-    val t0 = System.nanoTime()
-    val targets = Etl.runDirectory(spark, rulesDir, configure = registerAll(_, spark, corpus, factor))
-    val counts = targets.map { case (n, df) => n -> materialize(df) }
-    val wall = sec(t0)
-
-    // ×N growth for every replicated-spine table (location's address part
-    // is checked inside the total: constant location-code rows + N× address)
-    val exact = Seq("PERSON", "VISIT_OCCURRENCE", "CONDITION_OCCURRENCE")
-    val linearOk = exact.forall(n => counts(n) == base(n) * factor) &&
-      counts("LOCATION") > base("LOCATION") && counts("LOCATION") < base("LOCATION") * factor
-    require(linearOk, s"replica join graph broken: base=$base scaled=$counts factor=$factor")
-
-    // phase breakdown on a fresh engine, mirroring Engine.run's two-phase
-    // schedule (all spines, then all overlays), with materialization split out
-    val e = new Engine(spark)
-    registerAll(e, spark, corpus, factor)
-    // the SHARED loader (Etl.loadRules): the inline copy filtered only
-    // `.yaml`, so a `.yml` rule made the phase breakdown time a smaller
-    // rule set than the headline end-to-end pass measured
-    val parsed: Seq[(String, Rule)] = Etl.loadRules(rulesDir)
-    val tableRules = parsed.collect { case (_, t: graft.rules.TableRule) => t }
-    val tSpine = System.nanoTime()
-    tableRules.foreach(e.initialize)
-    val spineSec = sec(tSpine)
-    val tPlan = System.nanoTime()
-    tableRules.foreach(e.process)
-    val planSec = sec(tPlan)
-    val perTable = tableRules.map { r =>
-      val t = System.nanoTime()
-      materialize(e.targets(r.name))
-      r.name -> sec(t)
-    }
-    val overlaySec = perTable.map(_._2).sum
-
-    val countsJson = counts.toSeq.sortBy(_._1)
-      .map { case (n, c) => s""""$n":$c""" }.mkString("{", ",", "}")
-    val perTableJson = perTable.map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"etl_scale","factor":$factor,"wall_sec":$wall,""" +
-      s""""spine_sec":$spineSec,"overlay_plan_sec":$planSec,"materialize_sec":$overlaySec,""" +
-      s""""materialize_per_table":$perTableJson,"counts":$countsJson,"linear_ok":$linearOk}""")
-    spark.stop()
   }
 }

@@ -97,7 +97,7 @@ object EtlQueries {
       .groupBy(col("o_custkey"))
       .agg(sum(col("o_totalprice").cast(DecimalType(12, 2))).cast(DecimalType(38, 2)).as("__val"))
       .select(col("o_custkey").as("__id"), col("__val"))
-    Overlay(target, "c_custkey", "bal", ruleDf)
+    Overlay(target, "c_custkey", Seq(Overlay.Column("bal", None, Seq(ruleDf))))
       .withColumn("bal", col("bal").cast("double"))
       .orderBy("c_custkey")
   }

@@ -21,7 +21,8 @@ class CorpusSpec extends AnyFunSuite {
   val corpus = "src/test/resources/corpus"
 
   /** The four rules ship as main resources (src/main/resources/validation)
-    * so [[EtlScaleBench]] drives the identical documents; texts ported from
+    * so the `run` CLI and the repo benchmark (`omopbench/`) drive the
+    * identical documents; texts ported from
     * /root/reference/validation/<name>.yaml (see git history for the inline
     * originals).
     */

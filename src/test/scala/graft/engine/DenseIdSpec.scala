@@ -33,10 +33,9 @@ class DenseIdSpec extends AnyFunSuite {
   test("overlay: later rules win on matches, unmatched rows keep values, NULL overwrites") {
     val target = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
     val rule1 = Seq((1L, "x"), (2L, "y")).toDF("__id", "__val")
-    val step1 = Overlay(target, "id", "v", rule1)
     val rule2 = Seq((2L, null.asInstanceOf[String])).toDF("__id", "__val")
-    val step2 = Overlay(step1, "id", "v", rule2)
-    val got = step2.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
+    val out = Overlay(target, "id", Seq(Overlay.Column("v", None, Seq(rule1, rule2))))
+    val got = out.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
     // rule1 set 1->x, 2->y; rule2 matched id 2 with NULL (UPDATE semantics:
     // a match overwrites, even with NULL); id 3 untouched throughout
     assert(got.toSeq == Seq((1L, "x"), (2L, null), (3L, "c")))
@@ -45,7 +44,7 @@ class DenseIdSpec extends AnyFunSuite {
   test("overlay: multi-match collapses to a single row per id (row count stable)") {
     val target = Seq((1L, 10), (2L, 20)).toDF("id", "v")
     val rule = Seq((1L, 100), (1L, 101), (1L, 102)).toDF("__id", "__val")
-    val out = Overlay(target, "id", "v", rule)
+    val out = Overlay(target, "id", Seq(Overlay.Column("v", None, Seq(rule))))
     assert(out.count() == 2)
     val v1 = out.filter(col("id") === 1).collect().head.getInt(1)
     assert(Set(100, 101, 102).contains(v1))

@@ -170,6 +170,27 @@ class EngineFixtureSpec extends AnyFunSuite {
       Seq("alpha", 1, 2), Seq("alpha", 1, 2), Seq("alpha", 1, 2)))
   }
 
+  test("mixed-type rules on one column fold to the wider type, later rule wins") {
+    // LOCATION.zip's shape: a bigint rule, then a double rule on a subset
+    val rule = RuleParser.parse("mixed", """
+      |name: baz
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    foo_pk: {table: foo, columns: {id: integer}}
+      |columns:
+      |  - {name: zip, tables: [foo], expression: CAST(foo.beta AS BIGINT)}
+      |  - name: zip
+      |    tables: [foo]
+      |    constraints: [foo.id > 0]
+      |    expression: CAST(foo.gamma AS DOUBLE) + 0.5
+      |""".stripMargin)
+    val out = freshEngine().run(Seq(rule))("baz")
+    assert(out.schema("zip").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(sortedRows(out, "id", "id", "zip") == Seq(
+      Seq(1L, 4.0), Seq(2L, 5.5), Seq(3L, 7.5)))
+  }
+
   test("external.yaml: cross-schema lookup join (`test_integration.py:414-425`)") {
     val rule = RuleParser.parse("external", """
       |name: baz

@@ -330,6 +330,24 @@ class EtlSpec extends AnyFunSuite {
     assert(err.getMessage.contains("no_such_column"))
   }
 
+  test("a column whose rule values have no common type fails naming rule and column") {
+    val e = new Engine(spark)
+    e.registerSource("cerner", "foo", Seq((0, "a")).toDF("id", "alpha"))
+    val bad = graft.rules.RuleParser.parse("bad", """
+      |name: baz
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    foo_pk: {table: foo, columns: {id: integer}}
+      |columns:
+      |  - {name: alpha, tables: [foo], expression: "CAST('2020-01-01' AS DATE)"}
+      |  - {name: alpha, tables: [foo], expression: array(foo.id)}
+      |""".stripMargin)
+    val err = intercept[IllegalArgumentException](e.run(Seq(bad)))
+    assert(err.getMessage.contains("rule 'baz', column 'alpha'"))
+    assert(err.getMessage.contains("no common type"))
+  }
+
   test("Api.translateTable: JSON rule in, script + structured warnings out (`api.py:43-45`)") {
     // JSON body exactly as the reference's POST /api/translate would take
     val json = """{"name": "person",
