@@ -89,6 +89,7 @@ class Engine(
   def cleanup(): Unit = {
     createdViews.foreach(spark.catalog.dropTempView(_))
     createdViews.clear()
+    subqueryViews.clear()
   }
 
   /** Register a source table under its schema-qualified view name. */
@@ -114,17 +115,54 @@ class Engine(
   /** Resolve a source reference to a FROM-clause item exposing the bare
     * alias, mirroring Postgres name resolution (explicit schema → temp
     * table → default schema; `schema.py:92-102`).
+    *
+    * `run = false` gives the item as the statement ledger shows it: a
+    * subquery inline. `run = true` gives the item the engine executes: a
+    * subquery `rule` names in two or more places reads the view it was
+    * materialized into on first use ([[subqueryView]]), so the spine and
+    * every rule share one evaluation instead of re-planning it from the
+    * raw scans.
     */
-  private def fromItem(ref: SourceRef, dep: DependencyParts): String = ref match {
-    case QueryRef(alias, query) => s"(${translate(query, dep)}) AS $alias"
+  private def fromItem(ref: SourceRef, rule: TableRule, run: Boolean): String = ref match {
+    case QueryRef(alias, query) =>
+      val text = translate(query, rule.dep)
+      if (run && repeatedQueries(rule).contains(text)) s"${subqueryView(rule.name, text)} AS $alias"
+      else s"($text) AS $alias"
     case TableRef(alias, schemaOpt) =>
       val schema = schemaOpt.orElse(
-        if (tempViews.contains(alias)) None else dep.defaultSchema.orElse(Some("cerner")))
+        if (tempViews.contains(alias)) None else rule.dep.defaultSchema.orElse(Some("cerner")))
       schema match {
         case Some(s) => s"${s}_$alias AS $alias"
         case None => alias // session temp view
       }
   }
+
+  /** The translated subqueries `rule` names in two or more places: its pk
+    * sources plus the column rules [[process]] compiles.
+    */
+  private def repeatedQueries(rule: TableRule): Set[String] =
+    (rule.primaryKey.sources.map(_._2.table) ++
+      compiledColumns(rule).flatMap { case (_, _, rules) => rules.flatMap(_.tables) })
+      .collect { case QueryRef(_, q) => translate(q, rule.dep) }
+      .groupBy(identity).collect { case (text, uses) if uses.size > 1 => text }.toSet
+
+  /** (rule, translated subquery) → the view holding its one evaluation;
+    * [[initialize]] forgets a rule's entries, so a re-run reads its sources
+    * afresh.
+    */
+  private val subqueryViews: mutable.Map[(String, String), String] = mutable.Map.empty
+
+  /** The view of a repeated subquery, materialized on first use — an eager
+    * checkpoint, like a temp table (CREATE TEMP TABLE semantics: computed
+    * once). Named per rule like its mapping view, so a re-run replaces it
+    * rather than piling up views; dropped by [[cleanup]].
+    */
+  private def subqueryView(rule: String, text: String): String =
+    subqueryViews.getOrElseUpdate((rule, text), {
+      val view = s"__subquery_${rule}_${subqueryViews.keys.count(_._1 == rule)}"
+      registerView(view, sql(text).graftCheckpoint())
+      view
+    })
 
   private def refAlias(ref: SourceRef): String = ref match {
     case QueryRef(alias, _) => alias
@@ -184,6 +222,7 @@ class Engine(
     * (`schema.py:449-461`).
     */
   def initialize(rule: TableRule): Unit = {
+    subqueryViews.filterInPlace { case ((r, _), _) => r != rule.name }
     runScripts(rule)
     runTempTables(rule.name, rule.dep.preInit, rule.dep)
 
@@ -204,10 +243,9 @@ class Engine(
         val where =
           if (src.constraints.isEmpty) ""
           else " WHERE " + src.constraints.map(c => s"(${translate(c, rule.dep)})").mkString(" AND ")
-        val text = s"SELECT $selectCols FROM ${fromItem(src.table, rule.dep)}$where"
-        statementLog += Engine.Statement(rule.name, "spine_select", text)
-        val df = sql(text)
-        df.withColumn("__ord", lit(ordinal))
+        def text(run: Boolean) = s"SELECT $selectCols FROM ${fromItem(src.table, rule, run)}$where"
+        statementLog += Engine.Statement(rule.name, "spine_select", text(run = false))
+        sql(text(run = true)).withColumn("__ord", lit(ordinal))
     }
 
     val unioned = perSource.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -236,17 +274,12 @@ class Engine(
     * A constant rule (A17) overwrites every row, so it hides every earlier
     * rule for its column and becomes the value unmatched rows take; only
     * the keyed rules after it are compiled. [[Overlay]] then applies every
-    * column in one plan, so the target is joined once however many rules
-    * the table has.
+    * column in one aggregate, with no join, however many rules the table
+    * has.
     */
   def process(rule: TableRule): Unit = {
-    val enabled = rule.columns.filterNot(_.isInstanceOf[DisabledColumn])
-    val columns = enabled.map(_.name).distinct.map { name =>
-      val rs = enabled.filter(_.name == name)
-      val lastConst = rs.lastIndexWhere(_.isInstanceOf[ConstantColumn])
-      Overlay.Column(name,
-        rs.lift(lastConst).collect { case c: ConstantColumn => c.constant },
-        rs.drop(lastConst + 1).collect { case tc: TargetColumn => columnRuleSelect(rule, tc) })
+    val columns = compiledColumns(rule).map { case (name, default, rules) =>
+      Overlay.Column(name, default, rules.map(columnRuleSelect(rule, _)))
     }
     targets(rule.name) =
       try Overlay(targets(rule.name), rule.primaryKey.name, columns)
@@ -254,6 +287,19 @@ class Engine(
         case e: IllegalArgumentException =>
           throw new IllegalArgumentException(s"rule '${rule.name}', ${e.getMessage}", e)
       }
+  }
+
+  /** Per target column, in first-declaration order: its name, the last
+    * constant rule's value (if any) and the keyed rules declared after it.
+    */
+  private def compiledColumns(rule: TableRule): Seq[(String, Option[Any], Seq[TargetColumn])] = {
+    val enabled = rule.columns.filterNot(_.isInstanceOf[DisabledColumn])
+    enabled.map(_.name).distinct.map { name =>
+      val rs = enabled.filter(_.name == name)
+      val lastConst = rs.lastIndexWhere(_.isInstanceOf[ConstantColumn])
+      (name, rs.lift(lastConst).collect { case c: ConstantColumn => c.constant },
+        rs.drop(lastConst + 1).collect { case tc: TargetColumn => tc })
+    }
   }
 
   /** Build `SELECT <spine id> AS __id, <expr> AS __val FROM mapping ⋈ rule
@@ -276,12 +322,11 @@ class Engine(
       s"$srcAlias.$c = ${rule.name}.${srcAlias}_$c"
     }
 
-    val fromItems = mutable.ListBuffer(mapView)
-    fromItems ++= tc.tables.map(fromItem(_, dep))
     // if the pk source is not among the rule tables, it still participates
     // via the pk-link (the reference's FROM always re-lists rule tables; the
     // mapping columns carry the keys, so the source itself is only needed
     // when referenced — rule tables always include it in shipped rules).
+    val refItems = mutable.ListBuffer[String]()
 
     val preds = mutable.ListBuffer[String]()
     preds ++= pkLink
@@ -292,21 +337,22 @@ class Engine(
       // A16: join the referenced spine, non-null gate, emit its surrogate id
       // (`schema.py:226-239`; unmatched FK → row unmatched → value stays
       // NULL, golden `tests/test_integration.py:748-751`).
-      fromItems += s"mapping_$refTable AS $refTable"
+      refItems += s"mapping_$refTable AS $refTable"
       preds += s"$refTable.$refCol IS NOT NULL"
       preds += s"$refTable.$refCol = $valueExpr"
       valueExpr = s"$refTable.id"
     }
 
-    val text =
+    def statement(run: Boolean) =
       s"""SELECT ${rule.name}.id AS __id, ($valueExpr) AS __val
-         |FROM ${fromItems.mkString(", ")}
+         |FROM ${((mapView +: tc.tables.map(fromItem(_, rule, run))) ++ refItems).mkString(", ")}
          |WHERE ${preds.map(p => s"($p)").mkString(" AND ")}""".stripMargin
+    val text = statement(run = false)
     statementLog += Engine.Statement(rule.name, "column_update", text)
     // attach rule/column context to analysis errors — the reference only
     // surfaces raw Postgres errors at script-run time (`__main__.py:137-142`);
     // a rules author needs to know WHICH rule produced the bad SQL
-    try sql(text)
+    try sql(statement(run = true))
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(
@@ -367,7 +413,7 @@ object Engine {
       .mkString("\n")
 }
 
-/** UPDATE…FROM as a left-join overlay (SURVEY.md §7.5). */
+/** UPDATE…FROM as an overlay fold (SURVEY.md §7.5). */
 object Overlay {
 
   /** One target column's updates. `rules` are keyed frames (`__id`,
@@ -377,16 +423,24 @@ object Overlay {
     */
   case class Column(name: String, default: Option[Any], rules: Seq[DataFrame])
 
-  /** Apply `columns` to `target` (keyed by `pkName`) in one plan: every
-    * rule row becomes `(__id, __val_<col>, <rule index> AS __r_<col>)`, all
-    * of them are unioned, and one `groupBy(__id)` takes per column the value
-    * of the highest rule index (`max_by`). That is "later rule wins"; rows
-    * of other columns carry a NULL index and are skipped; an id matched
-    * several times by one rule keeps one of its values (Postgres
-    * UPDATE…FROM picks an arbitrary row too) and the row count stays
-    * stable. The fold joins the target once; a row matched for a column
-    * (`__r_<col>` non-NULL) takes the folded value even when it is NULL,
-    * as UPDATE sets the column unconditionally on match.
+  /** Apply `columns` to `target` (keyed by `pkName`) in one aggregate, with
+    * no join. Contract: `target` is unique and non-NULL on `pkName` (an
+    * engine skeleton is its spine's ids).
+    *
+    * Every rule row becomes `(__id, __val_<col>, <rule index> AS __r_<col>)`
+    * and every target row `(__id = pk, __t = true, <target columns>)`; all
+    * are unioned and one `groupBy(__id)` keeps the target's columns
+    * (`first` non-NULL: the one target row holds them) and takes per column
+    * the value of the highest rule index (`max_by`). That is "later rule
+    * wins"; rows of other columns carry a NULL index and are skipped; an id
+    * matched several times by one rule keeps one of its values (Postgres
+    * UPDATE…FROM picks an arbitrary row too). Only ids with a target row
+    * (`max(__t)` non-NULL) are kept, so rule ids absent from the target drop
+    * out and the row count is the target's. A row matched for a column
+    * (`__r_<col>` non-NULL) takes the folded value even when it is NULL, as
+    * UPDATE sets the column unconditionally on match; unmatched rows keep
+    * theirs. The target's columns keep their order; new columns follow in
+    * `columns` order.
     *
     * A column's rule values are unioned, so they widen to one common type
     * (bigint and double fold to double); types with none throw
@@ -394,6 +448,7 @@ object Overlay {
     */
   def apply(target: DataFrame, pkName: String, columns: Seq[Column]): DataFrame = {
     val keyed = columns.filter(_.rules.nonEmpty)
+    val helpers = keyed.flatMap(c => Seq(s"__val_${c.name}", s"__r_${c.name}"))
     val perColumn = keyed.map { c =>
       val tagged = c.rules.zipWithIndex.map { case (r, i) =>
         r.select(col("__id"), col("__val").as(s"__val_${c.name}"), lit(i).as(s"__r_${c.name}"))
@@ -404,22 +459,29 @@ object Overlay {
           s"column '${c.name}': rule values have no common type: ${e.getMessage}", e)
       }
     }
-    val joined = perColumn.reduceOption(_.unionByName(_, allowMissingColumns = true)) match {
+    val folded = perColumn.reduceOption(_.unionByName(_, allowMissingColumns = true)) match {
       case None => target
-      case Some(rows) =>
-        val aggs = keyed.flatMap { c =>
-          Seq(max_by(col(s"__val_${c.name}"), col(s"__r_${c.name}")).as(s"__val_${c.name}"),
-            max(s"__r_${c.name}").as(s"__r_${c.name}"))
-        }
-        val folded = rows.groupBy("__id").agg(aggs.head, aggs.tail: _*)
-        target.join(folded, target(pkName) === folded("__id"), "left").drop("__id")
+      case Some(rules) =>
+        val kept = target.columns.toSeq.filter(_ != pkName)
+        val rows = target
+          .select((col(pkName).as("__id") +: lit(true).as("__t") +: kept.map(col)): _*)
+          .unionByName(rules, allowMissingColumns = true)
+        val aggs = (max("__t").as("__t") +: kept.map(c => first(c, ignoreNulls = true).as(c))) ++
+          keyed.flatMap { c =>
+            Seq(max_by(col(s"__val_${c.name}"), col(s"__r_${c.name}")).as(s"__val_${c.name}"),
+              max(s"__r_${c.name}").as(s"__r_${c.name}"))
+          }
+        val pk = col("__id").cast(target.schema(pkName).dataType).as(pkName)
+        rows.groupBy("__id").agg(aggs.head, aggs.tail: _*)
+          .where(col("__t").isNotNull)
+          .select((target.columns.toSeq.map(c => if (c == pkName) pk else col(c)) ++ helpers.map(col)): _*)
     }
-    columns.foldLeft(joined) { (t, c) =>
+    columns.foldLeft(folded) { (t, c) =>
       val prior = c.default.map(lit)
         .getOrElse(if (t.columns.contains(c.name)) col(c.name) else lit(null))
       t.withColumn(c.name,
         if (c.rules.isEmpty) prior
         else when(col(s"__r_${c.name}").isNotNull, col(s"__val_${c.name}")).otherwise(prior))
-    }.drop(keyed.flatMap(c => Seq(s"__val_${c.name}", s"__r_${c.name}")): _*)
+    }.drop(helpers: _*)
   }
 }

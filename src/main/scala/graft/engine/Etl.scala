@@ -149,7 +149,7 @@ object Etl {
       case other => throw new IllegalArgumentException(s"unknown option: $other\n$usage")
     }
     val configure: Engine => Unit = { e =>
-      sources.result().foreach { case (sc, t, p) => e.registerSource(sc, t, spark.read.parquet(p)) }
+      sources.result().foreach { case (sc, t, p) => e.registerSource(sc, t, graft.sources.Tables.parquet(spark, p)) }
       csvDirs.result().foreach(d => registerExternalCsvDir(e, spark, d))
     }
     if (verb == "compile")

@@ -50,12 +50,30 @@ object Clustering {
     aggregate(col("embedding"), lit(0L),
       (acc, x) => acc + floor(x.cast("double") * (1L << 20)).cast("long"))
 
+  /** True where the embedding is non-NULL and exactly `dims` wide — the
+    * width the flat per-dimension centroid sums of [[kmeansRounds]] and
+    * [[pqTrain]] assume. Rows failing it are assigned no centroid, so a
+    * round's own aggregate counts them in its NULL group.
+    */
+  private def fixedWidth(dims: Int): Column = coalesce(size(col("embedding")) === dims, lit(false))
+
+  /** A NULL group in a round's aggregate: `n` rows broke [[fixedWidth]]. */
+  private def refuseRagged(op: String, dims: Int, n: Long): Nothing =
+    throw new IllegalArgumentException(
+      s"$op: $n embedding(s) are NULL or not $dims wide; every embedding must have the expected width $dims")
+
+  /** The init vectors are embeddings too ([[initCentroids]] reads a NULL as empty). */
+  private def refuseRaggedSeeds(op: String, dims: Int, seeds: Seq[Seq[Double]]): Unit = {
+    val n = seeds.count(_.size != dims)
+    if (n > 0) refuseRagged(op, dims, n)
+  }
+
   /** The k lowest-vec_id vectors as driver-side doubles — deterministic,
     * RNG-free init (k·dim values, independent of corpus size).
     */
   private[graft] def initCentroids(e: DataFrame, k: Int): Seq[Seq[Double]] =
     e.orderBy("vec_id").limit(k).select("embedding").collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
+      .map(r => Option(r.getSeq[Float](0)).fold(Seq.empty[Double])(_.map(_.toDouble).toSeq)).toSeq
 
   /** One Lloyd assignment step from the deterministic init, summarized per
     * cluster — the DuckDB-oracle anchor for the iterative twin: exact double
@@ -121,11 +139,13 @@ object Clustering {
     val seed = initCentroids(e, k) // the ONE deterministic-init definition
     var books: Seq[Seq[Seq[Double]]] =
       (0 until m).map(s => seed.map(v => v.slice(s * sub, (s + 1) * sub).toSeq))
+    val fits = fixedWidth(m * sub)
+    refuseRaggedSeeds("pqTrain", m * sub, seed)
     for (_ <- 1 to iters) {
       // one pass assigns EVERY subspace: array of (s, code, subvec) structs
       val parts = (0 until m).map { s =>
         val sv = slice(col("embedding"), s * sub + 1, sub)
-        val code = assignSub(sv, books(s)).getField("c")
+        val code = when(fits, assignSub(sv, books(s)).getField("c"))
         struct(lit(s).as("s"), code.as("code"), sv.as("sv"))
       }
       // per-(subspace, code) fixed-point sums, one flat codegen'd sum per
@@ -139,9 +159,10 @@ object Clustering {
         .groupBy(col("s"), col("code"))
         .agg(count(lit(1)).as("n"),
           array((0 until sub).map(p =>
-            sum(floor(col("sv")(p).cast("double") * (1L << 20)))): _*)
+            sum(floor(get(col("sv"), lit(p)).cast("double") * (1L << 20)))): _*)
             .as("qs"))
         .collect()
+      sums.find(_.isNullAt(1)).foreach(r => refuseRagged("pqTrain", m * sub, r.getLong(2)))
       val byKey = sums.map(r =>
         (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getSeq[Long](3))).toMap
       books = books.zipWithIndex.map { case (book, s) =>
@@ -655,11 +676,14 @@ object Clustering {
   private[operators] def kmeansRounds(
       e: DataFrame, k: Int, iters: Int,
       traceInertia: Boolean = false): Seq[(Long, DataFrame)] = {
-    val dims = e.select(size(col("embedding"))).first().getInt(0)
     var centroids = initCentroids(e, k)
+    // the expected width: the lowest-vec_id embedding's
+    val dims = centroids.head.size
+    val fits = fixedWidth(dims)
+    refuseRaggedSeeds("k-means", dims, centroids)
     (1 to iters).map { _ =>
       val assigned = e
-        .withColumn("a", assignTo(centroids)) // staged once; both fields read from it
+        .withColumn("a", when(fits, assignTo(centroids))) // staged once; both fields read from it
         .select(col("vec_id"), col("embedding"),
           col("a").getField("c").as("cluster"),
           col("a").getField("d").as("d"),
@@ -671,16 +695,19 @@ object Clustering {
       // the flat form pays ONE group-hash probe per vector and dims codegen'd
       // long adds into the same buffer — identical integer algebra (long
       // addition is exact and order-free), dims× fewer aggregated rows, and
-      // no Generate node in the per-round plan. Assumes fixed-width
-      // embeddings (the profile_embeddings contract; ragged rows already
-      // broke the posexplode spelling at the centroid-rebuild lookup).
+      // no Generate node in the per-round plan. The flat sums need
+      // fixed-width embeddings: a NULL or ragged row is assigned no
+      // cluster, so this aggregate counts it in the NULL group and the
+      // round refuses it (`get` reads a short row's missing element as
+      // NULL, where ANSI indexing would fail the task first).
       val sums = assigned
         .groupBy(col("cluster"))
         .agg(count(lit(1)).as("n"),
           array((0 until dims).map(p =>
-            sum(floor(col("embedding")(p).cast("double") * (1L << 20)))): _*)
+            sum(floor(get(col("embedding"), lit(p)).cast("double") * (1L << 20)))): _*)
             .as("qs"))
         .collect()
+      sums.find(_.isNullAt(0)).foreach(r => refuseRagged("k-means", dims, r.getLong(1)))
       val byCluster = sums.map(r =>
         r.getInt(0) -> (r.getLong(1), r.getSeq[Long](2))).toMap
       centroids = centroids.zipWithIndex.map { case (prev, c) =>

@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
@@ -130,26 +134,11 @@ object Tables {
     * ground truth; one footer read, no data pass.
     */
   private def tsNanosAnnotated(spark: SparkSession, path: String): Boolean = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val file =
-      if (fs.getFileStatus(p).isDirectory) {
-        val parts = fs.listStatus(p).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-        // fail with the designed refusal, not empty.minBy: Spark happily
-        // reads part files without a .parquet suffix (and Hive-partitioned
-        // layouts put them a level down), but the unit sniff needs a
-        // footer to inspect
-        require(parts.nonEmpty,
-          s"events timestamp-unit sniff: no *.parquet files directly " +
-            s"under $path — cannot inspect a footer to determine the ts " +
-            "unit. Point at the directory holding the part files.")
-        parts.minBy(_.getName.toString)
-      } else p
-    val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    val schema = try in.getFooter.getFileMetaData.getSchema finally in.close()
+    // fail with the designed refusal: the unit sniff needs a footer
+    val footer = firstFooter(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"events timestamp-unit sniff: no parquet data file under $path — " +
+        "cannot inspect a footer to determine the ts unit"))
+    val schema = footer.getParquetMetadata.getFileMetaData.getSchema
     import org.apache.parquet.schema.LogicalTypeAnnotation
     schema.getType(schema.getFieldIndex("ts")).asPrimitiveType()
       .getLogicalTypeAnnotation match {
@@ -158,6 +147,43 @@ object Tables {
       case _ => false
     }
   }
+
+  /** The footer of the first data file of a parquet `path` (a file, a
+    * directory of part files, or a glob), read on the driver: the
+    * name-first file not hidden by a `_` or `.` prefix. None when there is
+    * no such file (a missing path, or part files a level down).
+    */
+  private def firstFooter(spark: SparkSession, path: String): Option[Footer] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+    val files = Option(fs.globStatus(p)).toSeq.flatten.flatMap { s =>
+      if (s.isFile) Seq(s)
+      else fs.listStatus(s.getPath).toSeq.filter(c => c.isFile && !hidden(c.getPath.getName))
+    }
+    files.map(_.getPath).sortBy(_.getName).headOption.map { f =>
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try new Footer(f, in.getFooter) finally in.close()
+    }
+  }
+
+  /** `spark.read.parquet(path)` with the schema read from the first data
+    * file's footer on the driver ([[firstFooter]]), converted the way
+    * Spark's own inference converts it — Spark's embedded schema when the
+    * writer stored one, otherwise the parquet types under the session's
+    * conf. Spark's inference reads that same footer, but inside a job;
+    * this starts none. Like Spark without `mergeSchema`, it assumes every
+    * file of the path shares the first file's schema. A path with no data
+    * file of its own falls to Spark's read, which infers or reports it.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    firstFooter(spark, path) match {
+      case Some(footer) =>
+        val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(footer, converter)).parquet(path)
+      case None => spark.read.parquet(path)
+    }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {

@@ -5,8 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.JobCounter
+
 import graft.TestSpark
 import graft.rules.RuleParser
+import graft.sources.Tables
 
 /** Tier-5 realistic-corpus validation (`/root/reference/tests/test_rules.py`):
   * the four Cerner→OMOP rules (reference `validation` dir) run against the
@@ -36,7 +39,10 @@ class CorpusSpec extends AnyFunSuite {
   val visitRule = rule("visit_occurrence")
   val conditionRule = rule("condition_occurrence")
 
-  lazy val targets: Map[String, DataFrame] = {
+  val rules = Seq(personRule, locationRule, visitRule, conditionRule)
+
+  /** An engine with every corpus source registered. */
+  def corpusEngine(): Engine = {
     val e = new Engine(spark)
     // The workbook populates a subset of each DDL table's columns; in the
     // reference the remainder exist as NULL (tables pre-created from
@@ -60,8 +66,10 @@ class CorpusSpec extends AnyFunSuite {
     Seq("facility_postcode", "person_ethnicity_concept").foreach { t =>
       e.registerSource("external", t, spark.read.parquet(s"$corpus/external_$t.parquet"))
     }
-    e.run(Seq(personRule, locationRule, visitRule, conditionRule))
+    e
   }
+
+  lazy val targets: Map[String, DataFrame] = corpusEngine().run(rules)
 
   /** Mirror of `test_rules.py:131-171`: order both sides by the target's pk,
     * compare one column with float coercion for numerics.
@@ -100,4 +108,31 @@ class CorpusSpec extends AnyFunSuite {
     test(s"corpus: $t.$c matches the workbook golden (`test_rules.py`)") {
       check(t, c)
     }
+
+  /** Spark jobs of one `Engine.run` of the four rules plus the parquet
+    * write of every target, on this suite's session. Raise it only with
+    * the reason in CHANGES.md: each job is a driver round-trip.
+    */
+  val JobBudget = 52
+
+  test("one Engine.run of the corpus plus its writes stays within its Spark job budget") {
+    val e = corpusEngine()
+    val out = java.nio.file.Files.createTempDirectory("corpus-jobs")
+    val (_, jobs) = JobCounter.count(spark.sparkContext) {
+      e.run(rules).foreach { case (n, df) => df.write.mode("overwrite").parquet(s"$out/$n.parquet") }
+    }
+    assert(jobs <= JobBudget, s"$jobs Spark jobs, budget $JobBudget")
+  }
+
+  test("Tables.parquet: every corpus file (and a part-file directory) reads with Spark's schema, no job") {
+    val files = new java.io.File(corpus).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).sorted
+    assert(files.nonEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("parts").resolve("person.parquet").toString
+    spark.read.parquet(s"$corpus/cerner_person.parquet").repartition(3).write.parquet(dir)
+    (files :+ dir).foreach { p =>
+      val (df, jobs) = JobCounter.count(spark.sparkContext)(Tables.parquet(spark, p))
+      assert(jobs == 0, s"$p: $jobs jobs")
+      assert(df.schema == spark.read.parquet(p).schema, p)
+    }
+  }
 }

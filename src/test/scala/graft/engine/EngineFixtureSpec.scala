@@ -191,6 +191,38 @@ class EngineFixtureSpec extends AnyFunSuite {
       Seq(1L, 4.0), Seq(2L, 5.5), Seq(3L, 7.5)))
   }
 
+  test("a subquery feeding the spine and two rules is evaluated once; the ledger keeps it inline") {
+    val rule = RuleParser.parse("shared_query", """
+      |name: baz
+      |variables:
+      |  - &q
+      |    alias: q
+      |    query: select distinct id, alpha, beta from cerner.foo where beta > 4
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    q_pk: {table: *q, columns: {id: integer}}
+      |columns:
+      |  - {name: alpha, tables: [*q], expression: q.alpha, primary_key: q_pk}
+      |  - {name: beta, tables: [*q], expression: q.beta * 10, primary_key: q_pk}
+      |""".stripMargin)
+    // the subquery's base table as a file scan, so the plan shows every read of it
+    val base = java.nio.file.Files.createTempDirectory("shared-query").resolve("foo_base.parquet")
+    Seq((0, "a", 4, 2), (1, "c", 5, 5), (2, "d", 9, 7)).toDF("id", "alpha", "beta", "gamma")
+      .write.parquet(base.toString)
+    val e = freshEngine()
+    e.registerSource("cerner", "foo", spark.read.parquet(base.toString))
+    val out = e.run(Seq(rule))("baz")
+    assert(sortedRows(out, "id", "id", "alpha", "beta") == Seq(
+      Seq(1L, "c", 50), Seq(2L, "d", 90)))
+    assert(Engine.render(e.statementLog.toSeq) == SharedQueryLedger)
+    assert(!out.queryExecution.executedPlan.toString.contains("foo_base"),
+      out.queryExecution.executedPlan.toString)
+    assert(spark.catalog.tableExists("__subquery_baz_0"))
+    e.cleanup()
+    assert(!spark.catalog.tableExists("__subquery_baz_0"))
+  }
+
   test("external.yaml: cross-schema lookup join (`test_integration.py:414-425`)") {
     val rule = RuleParser.parse("external", """
       |name: baz
@@ -264,4 +296,25 @@ class EngineFixtureSpec extends AnyFunSuite {
     // post_init temp table saw the freshly built mapping
     assert(spark.table("temp_table_2").count() == 3)
   }
+
+  /** The ledger of the shared-subquery fixture as the engine rendered it
+    * when every statement still evaluated the subquery inline.
+    */
+  private val SharedQueryLedger =
+    """|-- baz: spine_select
+    |SELECT CAST(q.id AS INT) AS q_id FROM (select distinct id, alpha, beta from cerner_foo AS foo where beta > 4) AS q;
+    |
+    |-- baz: skeleton
+    |INSERT INTO omop.baz (id) SELECT id FROM mapping.baz;
+    |
+    |-- baz: column_update
+    |SELECT baz.id AS __id, (q.alpha) AS __val
+    |FROM mapping_baz AS baz, (select distinct id, alpha, beta from cerner_foo AS foo where beta > 4) AS q
+    |WHERE (q.id = baz.q_id);
+    |
+    |-- baz: column_update
+    |SELECT baz.id AS __id, (q.beta * 10) AS __val
+    |FROM mapping_baz AS baz, (select distinct id, alpha, beta from cerner_foo AS foo where beta > 4) AS q
+    |WHERE (q.id = baz.q_id);
+    |""".stripMargin
 }

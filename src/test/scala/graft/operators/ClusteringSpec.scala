@@ -72,6 +72,22 @@ class ClusteringSpec extends AnyFunSuite {
     assert(a.map(_.head).toSet.subsetOf((0 until 6).toSet))
   }
 
+  test("a NULL or ragged embedding makes embed_kmeans and pqTrain throw, naming the width") {
+    val good = (0L until 6L).map(i => i -> Seq.tabulate(4)(p => (i * 4 + p).toFloat))
+    def refusals(rows: Seq[(Long, Seq[Float])]): Seq[String] = {
+      val d = embDir(rows)
+      Seq(
+        intercept[IllegalArgumentException](Clustering.embed_kmeans(spark, d, k = 2, iters = 2)),
+        intercept[IllegalArgumentException](
+          Clustering.pqTrain(Tables.loadParallel(spark, d, "embeddings"), m = 2, k = 2, iters = 1, sub = 2))
+      ).map(_.getMessage)
+    }
+    // a short, a long and a NULL row after the seeds; a short seed
+    for (rows <- Seq(good :+ (9L -> Seq(1f, 2f)), good :+ (9L -> Seq(1f, 2f, 3f, 4f, 5f)),
+        good :+ (9L -> (null: Seq[Float])), good.updated(1, 1L -> Seq(1f, 2f, 3f))))
+      refusals(rows).foreach(m => assert(m.contains("1 embedding(s) are NULL or not 4 wide"), m))
+  }
+
   test("flat per-dimension centroid sums equal the posexplode reference algebra (pqTrain books bit-exact)") {
     // The round-20 centroid update aggregates sum(floor(emb[p]·2^20)) per
     // group with one flat codegen'd sum per dimension; this replays the
