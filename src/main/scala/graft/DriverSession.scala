@@ -2,18 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE session/config/materialization/JSON layer shared by the four
-  * driver-contract mains ([[Verify]], [[Bench]], [[Time]], [[Explain]]) —
+/** The ONE session/config/materialization/JSON layer shared by the
+  * driver-contract mains ([[Verify]], [[Bench]]) and [[Probe]] —
   * the config block was copy-pasted per main with drifting variations, so
   * a future required conf applied to one could silently diverge bench
   * from correctness runs.
   */
 private[graft] object DriverSession {
 
-  /** local[cpus] session with the repo's standard conf. AQE stays at
-    * Spark's default (on) unless SPARK_GRAFT_AQE explicitly overrides it
-    * for a plan experiment; log level defaults WARN, SPARK_GRAFT_LOG
-    * overrides.
+  /** local[cpus] session with the repo's standard conf (AQE at Spark's
+    * default, on). SPARK_GRAFT_CPUS overrides `defaultCpus`; log level
+    * defaults WARN, SPARK_GRAFT_LOG overrides.
     */
   def build(defaultCpus: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
@@ -23,7 +22,7 @@ private[graft] object DriverSession {
     val parts =
       if (cpus.forall(_.isDigit)) cpus
       else Runtime.getRuntime.availableProcessors().toString
-    val b = SparkSession.builder()
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", parts)
       .config("spark.sql.session.timeZone", "UTC")
@@ -37,10 +36,8 @@ private[graft] object DriverSession {
       // lock (pipeline_incremental 5.6 s -> 3.4 s, dd_minhash 3.3 s -> 1.8 s
       // min-of-3 from this one setting). Scale-independent: compilation is
       // driver/executor JVM work, unrelated to data volume; the cache holds
-      // compiled classes, never data or results. Overridable for
-      // experiments via SPARK_GRAFT_CODEGEN_CACHE.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      // compiled classes, never data or results.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       // AQE coalescing floor: with parallelismFirst (Spark's default) the
       // coalesce target is bytes/defaultParallelism CLAMPED BELOW by
       // minPartitionSize = 1 MB — a clamp that assumes rows are cheap
@@ -53,9 +50,8 @@ private[graft] object DriverSession {
       // ONLY when a shuffle carries under ~1 MB/core — at real data sizes
       // partitions are tens of MB and the setting is inert, so it is a
       // workload property (expensive rows, small bytes), not a local-mode
-      // tune. Overridable via SPARK_GRAFT_AQE_MIN_PARTITION.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+      // tune.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // Whole-stage-codegen bailout threshold, aligned with the JVM's real
       // JIT boundary: HotSpot refuses to compile methods over 8000 bytecodes
       // (-XX:HugeMethodLimit, not configurable in production), so a fused
@@ -70,13 +66,9 @@ private[graft] object DriverSession {
       // bailout fire exactly when fusion would de-JIT the stage (ann_ivfpq
       // 11.9 -> 5.2 s at 100×, ann_pq/embed_pq/decon_bm25 -15..-19 % at
       // sf0.1, nothing slower). Scale-independent: the threshold compares
-      // generated-code size, not data size. SPARK_GRAFT_CODEGEN_HUGE_LIMIT
-      // overrides for experiments.
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_HUGE_LIMIT", "8000"))
-    sys.env.get("SPARK_GRAFT_AQE")
-      .foreach(v => b.config("spark.sql.adaptive.enabled", v))
-    val s = b.getOrCreate()
+      // generated-code size, not data size.
+      .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      .getOrCreate()
     s.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
     s
   }

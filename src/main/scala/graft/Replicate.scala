@@ -50,29 +50,14 @@ object Replicate {
     }
   }
 
-  /** The N× frame itself (no write) — shared by [[stage]] and by benches
-    * that want the replica as a transient input. NOTE: documents replicas
-    * keep their TEXT verbatim (only doc_id shifts) — for dedup-family
-    * spots that is the deliberate pathological clique regime (§8.5's
-    * prior-round methodology); id-keyed and content-scoring operators see
-    * N distinct rows.
+  /** The N× frame itself (no write), as [[stage]] writes it. NOTE:
+    * documents replicas keep their TEXT verbatim (only doc_id shifts) —
+    * for dedup-family spots that is the deliberate pathological clique
+    * regime (§8.5's prior-round methodology); id-keyed and content-scoring
+    * operators see N distinct rows.
     */
-  def replicated(base: DataFrame, table: String, factor: Int): DataFrame =
-    shifted(base, table,
-      base.sparkSession.range(factor.toLong).toDF("__copy"))
-
-  /** ONE copy of the replica (the rows [[replicated]] would emit for copy
-    * index `copy`) — the delta-staging shape: a bench that wants "one more
-    * shifted copy beyond an f× corpus" must not build f+1 copies and
-    * filter f of them away.
-    */
-  def copySlice(base: DataFrame, table: String, copy: Long): DataFrame = {
-    import base.sparkSession.implicits._
-    shifted(base, table, Seq(copy).toDF("__copy"))
-  }
-
-  private def shifted(base: DataFrame, table: String,
-      copies: DataFrame): DataFrame = {
+  def replicated(base: DataFrame, table: String, factor: Int): DataFrame = {
+    val copies = base.sparkSession.range(factor.toLong).toDF("__copy")
     val rep = base.crossJoin(broadcast(copies))
     val out = table match {
       case "documents" =>

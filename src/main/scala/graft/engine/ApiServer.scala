@@ -53,7 +53,8 @@ object ApiServer {
   }
 
   private def handle(ex: HttpExchange, spark: SparkSession,
-      udfs: Map[String, SparkSession => Unit], configure: Engine => Unit): Unit =
+      udfs: Map[String, SparkSession => Unit], configure: Engine => Unit): Unit = {
+    var rejected = false // a rejected exchange is answered and closed by `reject`
     try {
       val contentLength =
         Option(ex.getRequestHeaders.getFirst("Content-Length")).flatMap(_.toLongOption)
@@ -66,7 +67,8 @@ object ApiServer {
         // nothing read yet: allow the full deadline for the first byte of
         // a slow-starting client before idle-bailing (bytesFlowed = false)
         drain(ex, contentLength.get, bytesFlowed = false)
-        respond(ex, 413, errJson(s"request body exceeds $MaxBodyBytes bytes"))
+        rejected = true
+        reject(ex)
       } else {
         // readNBytes caps chunked/unstated-length bodies at the same bound
         val raw = ex.getRequestBody.readNBytes(MaxBodyBytes.toInt + 1)
@@ -74,7 +76,8 @@ object ApiServer {
           // the stream already produced MaxBodyBytes+1 bytes (and may be
           // exhausted): idle-bail applies immediately, don't park 2 s
           drain(ex, DrainCapBytes, bytesFlowed = true)
-          respond(ex, 413, errJson(s"request body exceeds $MaxBodyBytes bytes"))
+          rejected = true
+          reject(ex)
         }
         else {
         val body = new String(raw, UTF_8)
@@ -100,7 +103,27 @@ object ApiServer {
         }
         }
       }
-    } finally ex.close()
+    } finally if (!rejected) ex.close()
+  }
+
+  /** Answer 413 and close the exchange on [[closer]], off the translate
+    * thread: closing makes the JDK server read up to 64 KB more of the
+    * unread body with a blocking read, so a client trickling its body would
+    * otherwise hold the single translate thread far past
+    * [[DrainDeadlineMs]] — for as long as it keeps the connection open.
+    */
+  private def reject(ex: HttpExchange): Unit =
+    closer.execute { () =>
+      try respond(ex, 413, errJson(s"request body exceeds $MaxBodyBytes bytes"))
+      catch { case _: java.io.IOException => () } // the client already hung up
+      finally ex.close()
+    }
+
+  private lazy val closer = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-api-close")
+    t.setDaemon(true)
+    t
+  }
 
   /** How much of an oversized body the server is willing to read to keep
     * the connection coherent. Beyond this the response is sent anyway and
@@ -110,17 +133,16 @@ object ApiServer {
   private val DrainCapBytes: Long = 4L * MaxBodyBytes
 
   /** How long the server will spend draining before answering anyway. The
-    * server runs a single-thread executor, so a blocking unbounded drain
-    * would let one stalled/trickling client wedge every other request; a
-    * fast local client (the case whose connection reset made the 413 test
-    * flaky) finishes well inside this. 2 s proved too tight under
-    * full-suite box load (round-20: a loopback client pushing the 10 MB
-    * oversized body was still mid-send at the deadline, and the
-    * respond-then-close reset its connection before it read the 413) —
-    * 8 s keeps the liveness bound while covering load spikes; the idle
-    * bail below still ends the common case in ~0.5 s.
+    * server runs a single-thread executor, so every queued request waits
+    * out this drain: a client that sends an oversized request's headers
+    * and then trickles its body stalls all others for the whole deadline
+    * (the drain polls only bytes already buffered, so it sees none and
+    * [[DrainIdleMs]] never starts), and no longer ([[reject]] closes
+    * off-thread). A fast local client finishes well inside it; one still
+    * mid-send under load may see its connection reset instead of reading
+    * the 413, which the client must retry (the oversized-body spec does).
     */
-  private val DrainDeadlineMs: Long = 8000L
+  private val DrainDeadlineMs: Long = 2000L
 
   /** How long the server keeps polling an empty stream before concluding
     * no more bytes are coming. The drain exists to let a FAST client
@@ -206,13 +228,7 @@ object ApiServer {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(8000)
     val host = args.lift(1).map(InetAddress.getByName).getOrElse(InetAddress.getLoopbackAddress)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val server = start(spark, port, host = host)
+    val server = start(Etl.session(), port, host = host)
     println(s"graft api listening on ${server.getAddress} (POST /api/translate)")
     Thread.currentThread.join()
   }

@@ -158,14 +158,26 @@ object Etl {
       executeDirectory(spark, rules, output, configure = configure)
   }
 
-  /** `graft.engine.Etl compile|run …` — the reference CLI (`__main__.py:34-49`, `95-143`). */
-  def main(args: Array[String]): Unit = {
+  /** The session [[main]] and [[ApiServer.main]] run on: local[SPARK_GRAFT_CPUS]
+    * (default 4) with as many shuffle partitions, no UI, WARN logging, and
+    * the session time zone pinned to UTC, so date parts in rules
+    * (`extract(year FROM …)`) do not depend on the host's zone.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `graft.engine.Etl compile|run …` — the reference CLI (`__main__.py:34-49`, `95-143`). */
+  def main(args: Array[String]): Unit = {
+    val spark = session()
     try cliMain(args, spark)
     catch {
       case e @ (_: IllegalArgumentException | _: MatchError) =>

@@ -240,7 +240,7 @@ object Clustering {
     * nothing corpus-sized moves). O(n·k²) distance work total at this
     * re-min-over-all-centers spelling — [[samp_kcenter_fast]] is the
     * O(n·k) running-min form, bit-identical output. MEASURED crossover
-    * (KcenterCrossoverBench, warm): at 20 k vectors the running-min form
+    * (SURVEY §8.5, warm): at 20 k vectors the running-min form
     * wins at every k (3.2→2.0 s at k=8, 22.2→10.2 s at k=64 — 20 k-row
     * checkpoints are ~free); at the 100× replica's 2 M vectors its
     * per-round n-row materialization costs real I/O and the break-even
@@ -445,7 +445,7 @@ object Clustering {
     * `least(dmin, d²-to-the-new-center)` column over the state frame —
     * O(n·k) total distance evaluations versus the façade's O(n·k²) — at
     * the price of one lineage-cut materialization per round (n rows ×
-    * (vec_id, embedding, dmin)). MEASURED (KcenterCrossoverBench): faster
+    * (vec_id, embedding, dmin)). MEASURED (SURVEY §8.5): faster
     * at every k on the 20 k-vector corpus (2.2× by k=64); at 2 M vectors
     * the checkpoint I/O is real and the break-even is k ≈ 16 (2× ahead
     * by k=64) — see [[samp_kcenter]]'s crossover table.

@@ -710,10 +710,10 @@ object DocsStream {
     * shape every per-gate scaladoc has been describing: boilerplate
     * extraction, then the provenance screens (URL blocklist, domain
     * authority), then the content screens (language, learned quality
-    * score, LM fluency). One shared definition so the throughput drive
-    * ([[ChainThroughput]]) and the end-to-end spec time/verify the SAME
-    * chain the per-gate parity specs certify — a hand-assembled copy in
-    * each caller could silently reorder or drop a stage.
+    * score, LM fluency). One shared definition so the end-to-end spec
+    * verifies the SAME chain the per-gate parity specs certify — a
+    * hand-assembled copy in each caller could silently reorder or drop a
+    * stage.
     *
     * The stream must carry `doc_id`, `text`, and `url` columns (a real
     * crawl stream has all three; the synthetic corpus derives `url` via
@@ -741,7 +741,7 @@ object DocsStream {
     * fold — WITH the whole upstream extraction tree substituted in —
     * down to the scan and re-evaluates it per filter per row (measured
     * 29× on the full chain: ~200 s vs ~7 s for sf0.1's 5 k docs;
-    * ChainProbe's prefix rows). Catalyst cannot push a predicate or
+    * measured per prefix in round 19). Catalyst cannot push a predicate or
     * collapse a projection across CollectMetrics (either would corrupt
     * the observed counts), so each stage's derived columns are computed
     * exactly once per row and downstream filters reference attributes,
@@ -767,7 +767,7 @@ object DocsStream {
   }
 
   /** Auto-selection crossover for [[Bm25Screen.broadcast]]=None —
-    * measured on the screened chain at 100× (ChainThroughput, 500 k
+    * measured on the screened chain at 100× (SURVEY §8.5, 500 k
     * docs, 250-query sf0.1 table, warm min): literal fold 347.9 µs/row
     * vs broadcast 80.4 µs/row against the unscreened chain's 67.0 —
     * i.e. the literal form pays ~1.12 µs/row PER QUERY STRUCT (the
@@ -786,9 +786,9 @@ object DocsStream {
       minLambda: Long)
 
   /** Survivor-quartile screen artifacts for [[c4Chain]]'s optional decon
-    * stages — the ONE derivation the chain-with-screens parity spec and
-    * [[ChainThroughput]]'s screens=on mode share (a hand-copied recipe
-    * drifted on maxDl within a day of existing): eval URLs from a
+    * stages — the ONE derivation the chain-with-screens parity spec
+    * uses (a hand-copied recipe drifted on maxDl within a day of
+    * existing): eval URLs from a
     * benchmark-release-sized mod-50 doc_id slice (the batch screen's
     * evalMod-3 default covers ALL 140 normalized plant urls —
     * gcd(3, 140) = 1 walks every residue — and would annihilate the

@@ -53,10 +53,10 @@ object EmbStream {
     * Per-arrival cost: a linear witness scan of the cell's admitted list —
     * O(|cell state|) cosines, bounded by `stateCap` (the worst case is a
     * full hot cell: stateCap · dims multiply-adds per arriving vector;
-    * [[graft.operators.SemDedupScaleBench]]'s streaming mode measures the
-    * realized per-row cost). If hot cells dominate, shrink cells (more
-    * centroids) before reaching for an in-cell prefilter — the quantizer
-    * is the knob that bounds BOTH state and scan.
+    * SURVEY §8.5 records the realized per-row cost of the embeddings
+    * chain, which these scans dominate). If hot cells dominate, shrink
+    * cells (more centroids) before reaching for an in-cell prefilter — the
+    * quantizer is the knob that bounds BOTH state and scan.
     *
     * State lifecycle: by default state never expires (`NoTimeout` — right
     * for bounded backfills). For an unbounded week-long run, pass

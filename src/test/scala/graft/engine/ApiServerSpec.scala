@@ -17,24 +17,28 @@ class ApiServerSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
 
-  private def post(uri: String, body: String): HttpResponse[String] =
+  private def post(uri: String, body: String,
+      timeout: java.time.Duration = java.time.Duration.ofMinutes(5)): HttpResponse[String] =
     HttpClient.newHttpClient().send(
-      HttpRequest.newBuilder(URI.create(uri))
+      HttpRequest.newBuilder(URI.create(uri)).timeout(timeout)
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
 
+  // same JSON body the reference endpoint takes (JSON is valid YAML)
+  private val rule = """{"name": "person",
+    |"primary_key": {"name": "person_id",
+    |  "sources": {"p_pk": {"table": "p", "columns": {"id": "bigint"}}}},
+    |"columns": [
+    |  {"name": "year_of_birth", "tables": ["p"], "expression": "p.y"}]}""".stripMargin
+
+  private def startWithSource() = ApiServer.start(spark, port = 0, configure = { e =>
+    e.registerSource("cerner", "p", Seq((1L, 1980)).toDF("id", "y"))
+  })
+
   test("POST /api/translate: rule in, script + warnings out; 422 on invalid; 405 on GET") {
-    val server = ApiServer.start(spark, port = 0, configure = { e =>
-      e.registerSource("cerner", "p", Seq((1L, 1980)).toDF("id", "y"))
-    })
+    val server = startWithSource()
     try {
       val base = s"http://localhost:${server.getAddress.getPort}/api/translate"
-      // same JSON body the reference endpoint takes (JSON is valid YAML)
-      val rule = """{"name": "person",
-        |"primary_key": {"name": "person_id",
-        |  "sources": {"p_pk": {"table": "p", "columns": {"id": "bigint"}}}},
-        |"columns": [
-        |  {"name": "year_of_birth", "tables": ["p"], "expression": "p.y"}]}""".stripMargin
       val ok = post(s"$base?name=person", rule)
       assert(ok.statusCode() == 200)
       assert(ok.headers().firstValue("Content-Type").orElse("") == "application/json")
@@ -86,6 +90,49 @@ class ApiServerSpec extends AnyFunSuite {
       }.collectFirst { case Some(resp) => resp }.get
       assert(r.statusCode() == 413)
       assert(r.body().contains("exceeds"))
+    } finally server.stop(0)
+  }
+
+  test("a client trickling an oversized body delays other requests by less than 4 s") {
+    val server = startWithSource()
+    try {
+      val port = server.getAddress.getPort
+      def timedPostMs(): Long = {
+        val t0 = System.nanoTime()
+        // bounded, so a server wedged behind the trickler fails the case
+        // instead of hanging it
+        val r = post(s"http://localhost:$port/api/translate?name=person", rule,
+          java.time.Duration.ofSeconds(30))
+        assert(r.statusCode() == 200)
+        (System.nanoTime() - t0) / 1000000L
+      }
+      timedPostMs()
+      val unloaded = timedPostMs()
+      // declares a body over the cap and sends its headers alone, then a
+      // byte every 300 ms: the server's drain sees no buffered body byte, so
+      // it runs to its deadline, and closing the exchange then waits on
+      // the rest of the body
+      val sock = new java.net.Socket("localhost", port)
+      val trickler = new Thread(() =>
+        try {
+          val out = sock.getOutputStream
+          out.write((s"POST /api/translate HTTP/1.1\r\nHost: localhost\r\n" +
+            s"Content-Length: ${ApiServer.MaxBodyBytes + 1}\r\n\r\n").getBytes("UTF-8"))
+          out.flush()
+          while (true) { Thread.sleep(300); out.write('x'); out.flush() }
+        } catch { case _: java.io.IOException | _: InterruptedException => () })
+      trickler.setDaemon(true)
+      trickler.start()
+      try {
+        Thread.sleep(600) // the trickling exchange now holds the server's one thread
+        val loaded = timedPostMs()
+        assert(loaded - unloaded < 4000,
+          s"a valid request waited ${loaded - unloaded} ms behind the trickling client")
+      } finally {
+        sock.close()
+        trickler.interrupt()
+        trickler.join(5000)
+      }
     } finally server.stop(0)
   }
 }

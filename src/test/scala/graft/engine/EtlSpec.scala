@@ -403,4 +403,31 @@ class EtlSpec extends AnyFunSuite {
       |""".stripMargin)
     assert(RequiredColumns.warnings(other).isEmpty)
   }
+
+  test("Etl.session pins the session time zone to UTC and leaves the shared session as it was") {
+    val sc = spark.sparkContext
+    val before = spark.conf.getAll
+    val hostZone = java.util.TimeZone.getDefault
+    // a fresh session on the shared context, whose own conf and the JVM
+    // zone both lack UTC: the zone it reports comes from Etl.session alone
+    val (fresh, zone) =
+      try {
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
+        java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/Los_Angeles"))
+        org.apache.spark.ContextConf.without(sc, "spark.sql.session.timeZone") {
+          val s = Etl.session()
+          (s, s.conf.get("spark.sql.session.timeZone"))
+        }
+      } finally {
+        java.util.TimeZone.setDefault(hostZone)
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    assert(zone == "UTC")
+    assert(fresh ne spark)
+    assert(fresh.sparkContext eq sc)
+    assert(spark.conf.getAll == before)
+    assert(SparkSession.active eq spark)
+  }
 }
