@@ -37,7 +37,7 @@ private[graft] object DriverSession {
       // min-of-3 from this one setting). Scale-independent: compilation is
       // driver/executor JVM work, unrelated to data volume; the cache holds
       // compiled classes, never data or results.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       // AQE coalescing floor: with parallelismFirst (Spark's default) the
       // coalesce target is bytes/defaultParallelism CLAMPED BELOW by
       // minPartitionSize = 1 MB — a clamp that assumes rows are cheap
@@ -72,6 +72,9 @@ private[graft] object DriverSession {
     s.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
     s
   }
+
+  /** Whole-stage-codegen class cache size of [[build]] and `Etl.session`. */
+  val CodegenCacheEntries = "5000"
 
   /** Full materialization to the noop sink — evaluates every output column
     * of every row. (`count()` is wrong here: Catalyst prunes unreferenced

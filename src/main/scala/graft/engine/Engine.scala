@@ -1,6 +1,10 @@
 package graft.engine
 
+import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors}
+
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,7 +38,13 @@ import graft.rules._
   * Two-phase schedule (`__main__.py:81-88`): all dependencies, then every
   * table's initialization (spines materialized once — each spine is
   * reused by all of its table's column rules and by other tables'
-  * `references`), then every table's column updates.
+  * `references`), then every table's column updates. The reference runs
+  * its script one statement at a time; here initialization runs in waves
+  * ([[waves]]): consecutive tables that cannot see each other's state
+  * build their spines at the same time, and a wave starts only when the
+  * one before it has finished. The statement ledger is the same as a
+  * table-at-a-time run's: a wave appends its tables' statements in table
+  * order.
   */
 class Engine(
     spark: SparkSession,
@@ -49,10 +59,10 @@ class Engine(
   /** target table name → mapping spine (id + one column per source natural
     * key, named `<table>_<col>`)
     */
-  val mappings: mutable.Map[String, DataFrame] = mutable.Map.empty
+  val mappings: mutable.Map[String, DataFrame] = TrieMap.empty
 
   /** target table name → current overlay state */
-  val targets: mutable.Map[String, DataFrame] = mutable.Map.empty
+  val targets: mutable.Map[String, DataFrame] = TrieMap.empty
 
   private val tempViews: mutable.Set[String] = mutable.Set.empty
 
@@ -66,7 +76,8 @@ class Engine(
     * `INSERT INTO omop.t (pk) SELECT id FROM mapping.t`,
     * `schema.py:320-328`), `column_update` (one per enabled column rule),
     * `drop_table` (one per table when `dropTables` is set — the
-    * `--drop-tables` ledger entry emitted by [[initialize]]).
+    * `--drop-tables` ledger entry emitted by [[initialize]]). Appended on
+    * the calling thread only.
     */
   val statementLog: mutable.Buffer[Engine.Statement] = mutable.Buffer.empty
 
@@ -77,7 +88,7 @@ class Engine(
     * references an undefined view silently resolve against another
     * document's state instead of failing like the stateless reference API.
     */
-  private val createdViews: mutable.Set[String] = mutable.Set.empty
+  private val createdViews: mutable.Set[String] = ConcurrentHashMap.newKeySet[String]().asScala
 
   private def registerView(name: String, df: DataFrame): Unit = {
     df.createOrReplaceTempView(name)
@@ -150,7 +161,7 @@ class Engine(
     * [[initialize]] forgets a rule's entries, so a re-run reads its sources
     * afresh.
     */
-  private val subqueryViews: mutable.Map[(String, String), String] = mutable.Map.empty
+  private val subqueryViews: mutable.Map[(String, String), String] = TrieMap.empty
 
   /** The view of a repeated subquery, materialized on first use — an eager
     * checkpoint, like a temp table (CREATE TEMP TABLE semantics: computed
@@ -174,13 +185,13 @@ class Engine(
     * `spark.sql` and parse failures are tolerated (the reference hands
     * scripts verbatim to Postgres; `TRUE;` in `tests/rules/dep.yaml:2`).
     */
-  private def runScripts(rule: Rule): Unit =
+  private def runScripts(rule: Rule, log: mutable.Buffer[Engine.Statement]): Unit =
     rule.dep.scripts.foreach { script =>
       // the optional schema qualifier must not win the capture:
       // `CREATE FUNCTION public.fn_age` registers as 'fn_age', not 'public'
       val fn = "(?is)create\\s+(or\\s+replace\\s+)?function\\s+(?:\\w+\\.)?(\\w+)".r
         .findFirstMatchIn(script).map(_.group(2))
-      statementLog += Engine.Statement(rule.name, "script", script)
+      log += Engine.Statement(rule.name, "script", script)
       fn match {
         case Some(name) =>
           udfs.get(name) match {
@@ -205,14 +216,15 @@ class Engine(
       }
     }
 
-  private def runTempTables(rule: String, qs: Seq[QueryRef], dep: DependencyParts): Unit =
+  private def runTempTables(
+      rule: String, qs: Seq[QueryRef], dep: DependencyParts, log: mutable.Buffer[Engine.Statement]): Unit =
     qs.foreach { q =>
       // materialized like Postgres CREATE TEMP TABLE … AS
       // (`generation.py:106-112`) — an eager localCheckpoint, not persist:
       // computed exactly once at creation (CREATE TEMP TABLE semantics),
       // blocks auto-released when the engine is dropped, no session-lifetime
       // CacheManager entry
-      statementLog += Engine.Statement(rule, "temp_table", translate(q.query, dep))
+      log += Engine.Statement(rule, "temp_table", translate(q.query, dep))
       val df = sql(translate(q.query, dep)).graftCheckpoint()
       registerView(q.alias, df)
       tempViews += q.alias
@@ -221,31 +233,24 @@ class Engine(
   /** Phase-1 for one table: pre-init, spine build + omop skeleton, post-init
     * (`schema.py:449-461`).
     */
-  def initialize(rule: TableRule): Unit = {
+  def initialize(rule: TableRule): Unit = initialize(rule, statementLog)
+
+  private def initialize(rule: TableRule, log: mutable.Buffer[Engine.Statement]): Unit = {
     subqueryViews.filterInPlace { case ((r, _), _) => r != rule.name }
-    runScripts(rule)
-    runTempTables(rule.name, rule.dep.preInit, rule.dep)
+    runScripts(rule, log)
+    runTempTables(rule.name, rule.dep.preInit, rule.dep, log)
 
     // `--drop-tables` (`__main__.py:41,70`; `schema.py:269-271`): the
     // reference prepends DROP TABLE IF EXISTS to each mapping build. This
     // engine always overwrites its in-session state (drop semantics are
     // implicit — A6 idempotency), so the flag affects the LEDGER only.
     if (dropTables)
-      statementLog += Engine.Statement(rule.name, "drop_table",
+      log += Engine.Statement(rule.name, "drop_table",
         s"DROP TABLE IF EXISTS mapping.${rule.name}")
 
-    val perSource = rule.primaryKey.sources.zipWithIndex.map {
-      case ((_, src), ordinal) =>
-        val tableRef = refAlias(src.table)
-        val selectCols = src.columns.map { case (c, dtype) =>
-          s"CAST($tableRef.$c AS ${Dialect.sparkType(dtype)}) AS ${tableRef}_$c"
-        }.mkString(", ")
-        val where =
-          if (src.constraints.isEmpty) ""
-          else " WHERE " + src.constraints.map(c => s"(${translate(c, rule.dep)})").mkString(" AND ")
-        def text(run: Boolean) = s"SELECT $selectCols FROM ${fromItem(src.table, rule, run)}$where"
-        statementLog += Engine.Statement(rule.name, "spine_select", text(run = false))
-        sql(text(run = true)).withColumn("__ord", lit(ordinal))
+    log ++= spineSelects(rule, run = false).map(Engine.Statement(rule.name, "spine_select", _))
+    val perSource = spineSelects(rule, run = true).zipWithIndex.map { case (text, ordinal) =>
+      sql(text).withColumn("__ord", lit(ordinal))
     }
 
     val unioned = perSource.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -260,12 +265,47 @@ class Engine(
 
     // `insert into omop.t (pk) select mapping.t.id from mapping.t`
     // (`schema.py:320-328`): the target starts as the bare key skeleton.
-    statementLog += Engine.Statement(rule.name, "skeleton",
+    log += Engine.Statement(rule.name, "skeleton",
       s"INSERT INTO omop.${rule.name} (${rule.primaryKey.name}) " +
         s"SELECT id FROM mapping.${rule.name}")
     targets(rule.name) = spine.select(col("id").as(rule.primaryKey.name))
 
-    runTempTables(rule.name, rule.dep.postInit, rule.dep)
+    runTempTables(rule.name, rule.dep.postInit, rule.dep, log)
+  }
+
+  /** One SELECT per pk source, in declaration order: the source's
+    * natural-key columns cast to their declared types, under its
+    * constraints (`run` as in [[fromItem]]).
+    */
+  private def spineSelects(rule: TableRule, run: Boolean): Seq[String] =
+    rule.primaryKey.sources.map { case (_, src) =>
+      val tableRef = refAlias(src.table)
+      val selectCols = src.columns.map { case (c, dtype) =>
+        s"CAST($tableRef.$c AS ${Dialect.sparkType(dtype)}) AS ${tableRef}_$c"
+      }.mkString(", ")
+      val where =
+        if (src.constraints.isEmpty) ""
+        else " WHERE " + src.constraints.map(c => s"(${translate(c, rule.dep)})").mkString(" AND ")
+      s"SELECT $selectCols FROM ${fromItem(src.table, rule, run)}$where"
+    }
+
+  /** `tables` cut into waves: runs of consecutive tables, in order, that
+    * initialize at the same time. A table starts a new wave, and runs in
+    * it alone, when it has setup parts (scripts, pre- or post-init temp
+    * tables, which may create what later tables read) or when its spine
+    * reads a `mapping_` view (another table's spine); a table whose name
+    * is already in the current wave starts the next one. When every wave
+    * holds one table this is the table-at-a-time order.
+    */
+  private def waves(tables: Seq[TableRule]): Seq[Seq[TableRule]] = {
+    def alone(t: TableRule) =
+      t.dep.scripts.nonEmpty || t.dep.preInit.nonEmpty || t.dep.postInit.nonEmpty ||
+        spineSelects(t, run = false).exists(Engine.MappingView.findFirstIn(_).isDefined)
+    tables.foldLeft(Vector.empty[Vector[TableRule]]) {
+      case (done :+ wave, t) if !alone(t) && !alone(wave.head) && !wave.exists(_.name == t.name) =>
+        done :+ (wave :+ t)
+      case (done, t) => done :+ Vector(t)
+    }
   }
 
   /** Phase-2 for one table: apply its column rules in declaration order
@@ -378,9 +418,9 @@ class Engine(
       case t: TableRule => Right(t)
     }
     deps.foreach { d =>
-      runScripts(d)
-      runTempTables(d.name, d.dep.preInit, d.dep)
-      runTempTables(d.name, d.dep.postInit, d.dep)
+      runScripts(d, statementLog)
+      runTempTables(d.name, d.dep.preInit, d.dep, statementLog)
+      runTempTables(d.name, d.dep.postInit, d.dep, statementLog)
     }
     // `depends_on` env inheritance (`__main__.py:67-80`): each dependency
     // file with a non-null `default_schema` overwrites the dependent table's
@@ -395,7 +435,11 @@ class Engine(
         case None => t
       }
     }
-    effective.foreach(initialize)
+    waves(effective).foreach { wave =>
+      val logs = wave.map(_ => mutable.Buffer.empty[Engine.Statement])
+      try Engine.concurrently(spark, wave.zip(logs).map { case (t, log) => () => initialize(t, log) })
+      finally logs.foreach(statementLog ++= _)
+    }
     effective.foreach(process)
     targets.toMap
   }
@@ -404,6 +448,28 @@ class Engine(
 object Engine {
   /** One generated SQL statement, attributed to the rule that emitted it. */
   case class Statement(rule: String, kind: String, sql: String)
+
+  private val MappingView = "(?i)\\bmapping_".r
+
+  /** Run `tasks` at the same time on a pool of min(tasks, cores) daemon
+    * threads, made for this call and shut down before it returns. Every
+    * task runs to its end, then the first failure in `tasks` order, if
+    * any, is rethrown as the task threw it.
+    */
+  private[engine] def concurrently(spark: SparkSession, tasks: Seq[() => Unit]): Unit =
+    if (tasks.nonEmpty) {
+      val pool = Executors.newFixedThreadPool(
+        math.min(tasks.size, spark.sparkContext.defaultParallelism),
+        { (r: Runnable) => val t = new Thread(r, "graft-engine"); t.setDaemon(true); t })
+      try {
+        val futures = tasks.map(task => pool.submit(new Callable[Unit] { def call(): Unit = task() }))
+        val failures = futures.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach(throw _)
+      } finally pool.shutdown()
+    }
 
   /** A statement ledger as a readable script: each statement under a
     * `-- <rule>: <kind>` header, `;`-terminated, in execution order.

@@ -98,7 +98,9 @@ object Etl {
 
   /** Execute a rules directory and write every target table as parquet
     * under `outDir/<target>.parquet` — the `run` CLI verb's body, exposed
-    * for library callers. Returns the targets.
+    * for library callers. Returns the targets. The writes run at the same
+    * time; every target that can be written is, and the first failure in
+    * target-name order, if any, is then thrown.
     */
   def executeDirectory(
       spark: SparkSession,
@@ -109,9 +111,9 @@ object Etl {
     val targets = runDirectory(spark, rulesDir, udfs, configure)
     val out = Paths.get(outDir)
     if (!Files.exists(out)) Files.createDirectories(out)
-    targets.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(out.resolve(s"$name.parquet").toString)
-    }
+    Engine.concurrently(spark, targets.toSeq.sortBy(_._1).map { case (name, df) =>
+      () => df.write.mode("overwrite").parquet(out.resolve(s"$name.parquet").toString)
+    })
     targets
   }
 
@@ -131,9 +133,12 @@ object Etl {
     val sources = Seq.newBuilder[(String, String, String)]
     val csvDirs = Seq.newBuilder[String]
     val it = args.iterator.drop(1)
+    def value(flag: String): String =
+      if (it.hasNext) it.next() else throw new IllegalArgumentException(s"$flag needs a value\n$usage")
+    val Source = "([^=.]+)\\.([^=]+)=(.+)".r
     while (it.hasNext) it.next() match {
-      case "--rules" => rules = it.next()
-      case "--output" => output = it.next()
+      case "--rules" => rules = value("--rules")
+      case "--output" => output = value("--output")
       case f @ ("--drop-tables" | "--one-file" | "--no-one-file") =>
         require(verb == "compile", s"$f is a compile-only flag\n$usage")
         f match {
@@ -141,11 +146,12 @@ object Etl {
           case "--one-file" => oneFile = true
           case "--no-one-file" => oneFile = false
         }
-      case "--source" =>
-        val Array(qualified, path) = it.next().split("=", 2)
-        val Array(schema, table) = qualified.split("\\.", 2)
-        sources += ((schema, table, path))
-      case "--external-csv" => csvDirs += it.next()
+      case "--source" => value("--source") match {
+        case Source(schema, table, path) => sources += ((schema, table, path))
+        case bad => throw new IllegalArgumentException(
+          s"--source expects schema.table=path, got '$bad'\n$usage")
+      }
+      case "--external-csv" => csvDirs += value("--external-csv")
       case other => throw new IllegalArgumentException(s"unknown option: $other\n$usage")
     }
     val configure: Engine => Unit = { e =>
@@ -159,9 +165,12 @@ object Etl {
   }
 
   /** The session [[main]] and [[ApiServer.main]] run on: local[SPARK_GRAFT_CPUS]
-    * (default 4) with as many shuffle partitions, no UI, WARN logging, and
-    * the session time zone pinned to UTC, so date parts in rules
-    * (`extract(year FROM …)`) do not depend on the host's zone.
+    * (default 4) with as many shuffle partitions, no UI, WARN logging, the
+    * session time zone pinned to UTC, so date parts in rules
+    * (`extract(year FROM …)`) do not depend on the host's zone, and the
+    * driver session's codegen class cache: one `run` compiles about 210
+    * classes, more than Spark's default 100 entries hold, so without it a
+    * second run in the same JVM recompiles every one.
     */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -170,6 +179,7 @@ object Etl {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", graft.DriverSession.CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -180,8 +190,7 @@ object Etl {
     val spark = session()
     try cliMain(args, spark)
     catch {
-      case e @ (_: IllegalArgumentException | _: MatchError) =>
-        System.err.println(e.getMessage); sys.exit(2)
+      case e: IllegalArgumentException => System.err.println(e.getMessage); sys.exit(2)
     }
     finally spark.stop()
   }

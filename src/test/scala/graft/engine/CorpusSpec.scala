@@ -44,30 +44,38 @@ class CorpusSpec extends AnyFunSuite {
   /** An engine with every corpus source registered. */
   def corpusEngine(): Engine = {
     val e = new Engine(spark)
+    register(corpusSources())(e)
+    e
+  }
+
+  /** Every corpus source as (schema, table, frame). */
+  def corpusSources(): Seq[(String, String, DataFrame)] = {
     // The workbook populates a subset of each DDL table's columns; in the
     // reference the remainder exist as NULL (tables pre-created from
     // `schema/cerner.sql`). Supplement the rule-referenced ones.
     def withNullCol(df: DataFrame, name: String): DataFrame =
       if (df.columns.contains(name)) df else df.withColumn(name, lit(null).cast("double"))
     Seq("person", "encounter", "encntr_loc_hist", "diagnosis", "problem",
-      "address", "nomenclature", "code_value").foreach { t =>
+      "address", "nomenclature", "code_value").map { t =>
       val df = spark.read.parquet(s"$corpus/cerner_$t.parquet")
       val full = if (t == "encounter" || t == "encntr_loc_hist") withNullCol(df, "active_ind") else df
-      e.registerSource("cerner", t, full)
+      ("cerner", t, full)
+    } ++ Seq("concept", "concept_relationship").map { t =>
+      ("omop", t, spark.read.parquet(s"$corpus/omop_$t.parquet"))
+    } ++ Seq(
+      // omop.vocabulary exists in the DDL but ships empty — the rule that cross
+      // joins it matches nothing, exactly as in Postgres (`schema/omop.sql`)
+      ("omop", "vocabulary", spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(Seq(StructField("vocabulary_id", StringType)))))
+    ) ++ Seq("facility_postcode", "person_ethnicity_concept").map { t =>
+      ("external", t, spark.read.parquet(s"$corpus/external_$t.parquet"))
     }
-    Seq("concept", "concept_relationship").foreach { t =>
-      e.registerSource("omop", t, spark.read.parquet(s"$corpus/omop_$t.parquet"))
-    }
-    // omop.vocabulary exists in the DDL but ships empty — the rule that cross
-    // joins it matches nothing, exactly as in Postgres (`schema/omop.sql`)
-    e.registerSource("omop", "vocabulary", spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("vocabulary_id", StringType)))))
-    Seq("facility_postcode", "person_ethnicity_concept").foreach { t =>
-      e.registerSource("external", t, spark.read.parquet(s"$corpus/external_$t.parquet"))
-    }
-    e
   }
+
+  /** Registers `sources` on the engine it is given (an `Etl` `configure`). */
+  def register(sources: Seq[(String, String, DataFrame)])(e: Engine): Unit =
+    sources.foreach { case (schema, t, df) => e.registerSource(schema, t, df) }
 
   lazy val targets: Map[String, DataFrame] = corpusEngine().run(rules)
 
@@ -134,5 +142,48 @@ class CorpusSpec extends AnyFunSuite {
       assert(jobs == 0, s"$p: $jobs jobs")
       assert(df.schema == spark.read.parquet(p).schema, p)
     }
+  }
+
+  /** Spark jobs of one `Etl.executeDirectory` of the validation rules on
+    * the corpus: the same work as the test above, with the tables'
+    * spines built in one wave and the four writes at the same time, so
+    * the same budget holds. The sources are read outside the count, as
+    * above.
+    */
+  test("one Etl.executeDirectory of the corpus stays within the same Spark job budget") {
+    val out = java.nio.file.Files.createTempDirectory("corpus-exec-jobs")
+    val sources = corpusSources()
+    val (targets, jobs) = JobCounter.count(spark.sparkContext) {
+      Etl.executeDirectory(spark, "src/main/resources/validation", out.toString, configure = register(sources))
+    }
+    assert(targets.keySet == rules.map(_.name).toSet)
+    targets.keys.foreach(n => assert(java.nio.file.Files.exists(out.resolve(s"$n.parquet")), n))
+    assert(jobs <= JobBudget, s"$jobs Spark jobs, budget $JobBudget")
+  }
+
+  /** `validation_etl.sql` is the script `compileDirectory` wrote when the
+    * engine initialized one table at a time; waves must not change it.
+    */
+  test("compileDirectory of the validation rules renders the table-at-a-time ledger") {
+    val out = java.nio.file.Files.createTempDirectory("corpus-ledger")
+    Etl.compileDirectory(spark, "src/main/resources/validation", out.toString,
+      configure = register(corpusSources()))
+    val in = getClass.getResourceAsStream("/validation_etl.sql")
+    val expected = try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    assert(java.nio.file.Files.readString(out.resolve("etl.sql")) == expected)
+  }
+
+  test("three Engine.runs of the corpus give identical ids and targets") {
+    def rows(df: DataFrame): Seq[Seq[Any]] =
+      df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq.map(_.toSeq)
+    def once(): Map[String, Seq[Seq[Any]]] = {
+      val e = corpusEngine()
+      val out = e.run(rules)
+      e.mappings.toMap.map { case (n, df) => s"mapping_$n" -> rows(df) } ++
+        out.map { case (n, df) => n -> rows(df) }
+    }
+    val first = once()
+    assert(first.size == 2 * rules.size)
+    Seq.fill(2)(once()).foreach(again => assert(again == first))
   }
 }

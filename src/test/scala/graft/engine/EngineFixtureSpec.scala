@@ -297,6 +297,112 @@ class EngineFixtureSpec extends AnyFunSuite {
     assert(spark.table("temp_table_2").count() == 3)
   }
 
+  test("a spine that reads an earlier table's mapping gets that table's ids, run after run") {
+    val baz = RuleParser.parse("wave_baz", """
+      |name: wave_baz
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    foo_pk: {table: foo, columns: {id: integer}}
+      |columns:
+      |  - {name: alpha, tables: [foo], expression: foo.alpha}
+      |""".stripMargin)
+    val qux = RuleParser.parse("wave_qux", """
+      |name: wave_qux
+      |variables:
+      |  - &m
+      |    alias: m
+      |    query: select id as baz_id from mapping.wave_baz
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    m_pk: {table: *m, columns: {baz_id: bigint}}
+      |columns:
+      |  - {name: baz_id, tables: [*m], expression: m.baz_id, primary_key: m_pk}
+      |""".stripMargin)
+    // each run has one more source row, so a spine built from the previous
+    // run's mapping view would miss the newest id
+    (1 to 5).foreach { run =>
+      val e = freshEngine()
+      e.registerSource("cerner", "foo", (0 until run + 1).map(i => (i, s"a$i")).toDF("id", "alpha"))
+      val out = e.run(Seq(baz, qux))
+      val ids = e.mappings("wave_baz").select("id").as[Long].collect().sorted.toSeq
+      assert(ids == (1L to run + 1L))
+      assert(out("wave_qux").select("baz_id").as[Long].collect().sorted.toSeq == ids, s"run $run")
+    }
+  }
+
+  test("tables around one with a post-init temp table give the table-at-a-time targets and ledger") {
+    val rules = Seq(
+      """
+      |name: wave_a
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    foo_pk: {table: foo, columns: {id: integer}}
+      |columns:
+      |  - {name: alpha, tables: [foo], expression: foo.alpha}
+      |""",
+      """
+      |name: wave_b
+      |post_init:
+      |  - alias: wave_b_ids
+      |    query: select mapping.wave_b.id as b_id, mapping.wave_b.bar_id as bar_id from mapping.wave_b
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    bar_pk: {table: bar, columns: {id: integer}}
+      |columns:
+      |  - {name: beta, tables: [bar], expression: bar.beta}
+      |""",
+      """
+      |name: wave_c
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    b_pk: {table: wave_b_ids, columns: {b_id: bigint}}
+      |columns:
+      |  - {name: bar_id, tables: [wave_b_ids], expression: wave_b_ids.bar_id}
+      |""",
+      """
+      |name: wave_d
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    bar_pk: {table: bar, columns: {alpha: text}}
+      |columns:
+      |  - {name: gamma, tables: [bar], expression: bar.gamma}
+      |""").zipWithIndex.map { case (y, i) => RuleParser.parse(s"wave_$i", y.stripMargin) }
+    def snapshot(e: Engine, targets: collection.Map[String, DataFrame]) =
+      (targets.toMap.map { case (n, df) => n -> sortedRows(df, "id", df.columns.toSeq: _*) },
+        Engine.render(e.statementLog.toSeq))
+    val waved = freshEngine()
+    val (targets, ledger) = snapshot(waved, waved.run(rules))
+    val one = freshEngine()
+    rules.collect { case t: graft.rules.TableRule => t }.foreach(one.initialize)
+    rules.collect { case t: graft.rules.TableRule => t }.foreach(one.process)
+    assert(snapshot(one, one.targets) == (targets, ledger))
+    assert(targets("wave_c").size == 3)
+  }
+
+  test("two tables of one name initialize one after the other: the later one's spine wins") {
+    def table(source: String, key: String) = RuleParser.parse(s"dup_$source", s"""
+      |name: wave_dup
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    pk: {table: $source, columns: {$key: integer}}
+      |columns:
+      |  - {name: unused, enabled: false}
+      |""".stripMargin)
+    (1 to 5).foreach { run =>
+      val e = freshEngine()
+      // foo has 3 rows, foo2bar 2
+      assert(e.run(Seq(table("foo", "id"), table("foo2bar", "foo_id")))("wave_dup").count() == 2, s"run $run")
+      assert(e.mappings("wave_dup").columns.toSeq == Seq("id", "foo2bar_foo_id"), s"run $run")
+    }
+  }
+
   /** The ledger of the shared-subquery fixture as the engine rendered it
     * when every statement still evaluated the subquery inline.
     */

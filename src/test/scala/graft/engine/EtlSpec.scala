@@ -430,4 +430,61 @@ class EtlSpec extends AnyFunSuite {
     assert(spark.conf.getAll == before)
     assert(SparkSession.active eq spark)
   }
+
+  test("Etl.session uses the driver session's codegen class cache, not Spark's 100 entries") {
+    val sc = spark.sparkContext
+    val key = "spark.sql.codegen.cache.maxEntries"
+    // a fresh session on the shared context, whose own conf lacks the key:
+    // the size it reports comes from Etl.session alone
+    val entries =
+      try {
+        SparkSession.clearActiveSession()
+        SparkSession.clearDefaultSession()
+        org.apache.spark.ContextConf.without(sc, key)(Etl.session().conf.get(key))
+      } finally {
+        SparkSession.setDefaultSession(spark)
+        SparkSession.setActiveSession(spark)
+      }
+    assert(entries == graft.DriverSession.CodegenCacheEntries)
+    assert(entries.toInt > 100)
+    assert(SparkSession.active eq spark)
+  }
+
+  test("cliMain: a flag with no value or a malformed --source names the flag and prints usage") {
+    val noValue = intercept[IllegalArgumentException](Etl.cliMain(Array("run", "--rules"), spark))
+    assert(noValue.getMessage.contains("--rules needs a value"))
+    assert(noValue.getMessage.contains("usage:"))
+    Seq("foo", "person=/p").foreach { bad =>
+      val err = intercept[IllegalArgumentException](Etl.cliMain(Array("run", "--source", bad), spark))
+      assert(err.getMessage.contains(s"--source expects schema.table=path, got '$bad'"))
+      assert(err.getMessage.contains("usage:"))
+    }
+  }
+
+  test("executeDirectory writes every target it can, then throws the first failure in name order") {
+    val dir = Files.createTempDirectory("graft-exec-fail")
+    def table(name: String, column: String, expression: String) = s"""
+      |name: $name
+      |primary_key:
+      |  name: id
+      |  sources:
+      |    foo_pk: {table: foo, columns: {id: integer}}
+      |columns:
+      |  - {name: $column, tables: [foo], expression: "$expression"}
+      |""".stripMargin
+    // parquet cannot store a calendar interval column
+    Files.writeString(dir.resolve("1.yaml"), table("zgood", "alpha", "foo.alpha"))
+    Files.writeString(dir.resolve("2.yaml"), table("mbad", "m_interval", "make_interval(1)"))
+    Files.writeString(dir.resolve("3.yaml"), table("abad", "a_interval", "make_interval(1)"))
+    val out = Files.createTempDirectory("graft-exec-fail-out")
+    val err = intercept[org.apache.spark.sql.AnalysisException] {
+      Etl.executeDirectory(spark, dir.toString, out.toString, configure = { e =>
+        e.registerSource("cerner", "foo", Seq((0, "a"), (1, "b")).toDF("id", "alpha"))
+      })
+    }
+    assert(err.getMessage.contains("a_interval"), err.getMessage)
+    assert(!err.getMessage.contains("m_interval"), err.getMessage)
+    val good = spark.read.parquet(out.resolve("zgood.parquet").toString)
+    assert(good.orderBy("id").select("alpha").as[String].collect().toSeq == Seq("a", "b"))
+  }
 }
