@@ -87,9 +87,9 @@ private[graft] object DriverSession {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab/CR in builder-authored SQL, or a quote in a caller-supplied
     * path, would otherwise make the driver's json.load fail and silently
-    * zero the round's artifact.
+    * zero the round's artifact. A null string quotes as `""`.
     */
-  def jsonQuote(s: String): String = "\"" + s.flatMap {
+  def jsonQuote(s: String): String = "\"" + Option(s).getOrElse("").flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -35,7 +35,7 @@ object Dialect {
     "anti", "qualify")
 
   def qualify(sql: String, schemas: Set[String]): String = {
-    val qualified = ("(?i)\\b(" + schemas.mkString("|") + ")\\.(\\w+)(\\.\\w+)").r
+    val qualified = ("(?i)\\b(" + schemas.mkString("|") + ")\\.(\\w+)(\\.(?:\\w+|\\*))").r
     val bare = ("(?i)\\b(" + schemas.mkString("|") + ")\\.(\\w+)").r
     val aliasAfter = "(?is)^\\s+(?:as\\s+)?([a-zA-Z_]\\w*)".r
     mapOutsideLiterals(sql) { seg =>
@@ -68,9 +68,9 @@ object Dialect {
 
   /** Depth-aware branch rewrite: the key list may contain nested calls
     * (`DISTINCT ON (substring(zip, 1, 3))`) and the select list may contain
-    * function-call commas, so the pieces are located by paren/literal-aware
-    * scanning ([[matchingParen]], [[findTopLevelKeyword]], [[splitTopLevel]])
-    * rather than regex groups.
+    * function-call commas, so the pieces are located by reading [[scan]]
+    * ([[matchingParen]], [[topLevelKeyword]], [[splitTopLevel]]) rather
+    * than regex groups.
     */
   private def rewriteDistinctOnBranch(sql: String): String = {
     "(?is)^\\s*select\\s+distinct\\s+on\\s*\\(".r.findFirstMatchIn(sql) match {
@@ -81,11 +81,11 @@ object Dialect {
         if (close < 0) return sql
         val keys = sql.substring(open + 1, close).trim
         val rest = sql.substring(close + 1)
-        val fromIdx = findTopLevelKeyword(rest, "FROM")
+        val fromIdx = topLevelKeyword(rest, "FROM").headOption.getOrElse(-1)
         if (fromIdx < 0) return sql
         val selectList = rest.substring(0, fromIdx).trim.stripSuffix(",")
         val afterSelect = rest.substring(fromIdx)
-        val obIdx = findTopLevelKeyword(afterSelect, "ORDER")
+        val obIdx = topLevelKeyword(afterSelect, "ORDER").headOption.getOrElse(-1)
         val (fromPart, explicit) =
           if (obIdx < 0) (afterSelect.trim, None)
           else {
@@ -129,136 +129,77 @@ object Dialect {
     }
   }
 
-  /** Delimiter-state step shared by the scanners: `lit` is 0 outside any
-    * quoted region, else the delimiter char that opened it — `'` (string
-    * literal), `"` (SQL quoted identifier), `` ` `` (backtick identifier).
-    * Doubled delimiters (`''`, `""`) scan as exit-then-reenter, which
-    * classifies every char region identically to true escape handling.
-    */
-  private def litStep(lit: Char, c: Char): Char =
-    if (lit != 0) { if (c == lit) 0.toChar else lit }
-    else if (c == '\'' || c == '"' || c == '`') c
-    else lit
+  /** Marks a char of a quoted region in [[scan]]'s output. */
+  private final val Quoted = Int.MinValue
 
-  /** Index of the `)` matching the `(` at `open` (literal/identifier-aware),
-    * or -1.
+  /** The one quote- and paren-aware pass every structural question reads:
+    * for each char of `sql`, [[Quoted]] if it belongs to a string literal,
+    * a `"…"` identifier or a `` `…` `` identifier (delimiters included),
+    * else its paren depth. A doubled delimiter (`''`, `""`) closes and
+    * reopens its region, so it stays quoted as an escape would; an
+    * unterminated region runs to the end of the text. A `(` and its
+    * matching `)` carry the depth outside them, so a top-level char has
+    * depth 0.
     */
+  private def scan(sql: String): Array[Int] = {
+    val out = new Array[Int](sql.length)
+    var depth = 0
+    var quote: Char = 0
+    for (i <- sql.indices) {
+      val c = sql.charAt(i)
+      if (quote != 0) {
+        out(i) = Quoted
+        if (c == quote) quote = 0
+      } else if (c == '\'' || c == '"' || c == '`') {
+        out(i) = Quoted
+        quote = c
+      } else {
+        if (c == ')') depth -= 1
+        out(i) = depth
+        if (c == '(') depth += 1
+      }
+    }
+    out
+  }
+
+  /** Index of the `)` matching the `(` at `open`, or -1. */
   private def matchingParen(sql: String, open: Int): Int = {
-    var depth = 0
-    var lit: Char = 0
-    var i = open
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      val prev = lit
-      lit = litStep(lit, c)
-      if (prev == 0 && lit == 0) c match {
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ => ()
-      }
-      i += 1
-    }
-    -1
+    val d = scan(sql)
+    (open + 1 until sql.length).find(i => sql.charAt(i) == ')' && d(i) == d(open)).getOrElse(-1)
   }
 
-  /** First word-boundary occurrence of `kw` at paren depth 0 outside string
-    * literals and quoted identifiers (case-insensitive), or -1.
+  /** Every word-boundary occurrence of `kw` at paren depth 0
+    * outside quoted regions, matched case-insensitively, in order.
     */
-  private def findTopLevelKeyword(sql: String, kw: String): Int = {
-    val upper = sql.toUpperCase
-    val k = kw.toUpperCase
-    var depth = 0
-    var lit: Char = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      val prev = lit
-      lit = litStep(lit, c)
-      if (prev == 0 && lit == 0) c match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && upper.startsWith(k, i) &&
-              (i == 0 || !Character.isLetterOrDigit(sql.charAt(i - 1)) && sql.charAt(i - 1) != '_') &&
-              (i + k.length >= sql.length ||
-                !Character.isLetterOrDigit(sql.charAt(i + k.length)) && sql.charAt(i + k.length) != '_'))
-            return i
-      }
-      i += 1
-    }
-    -1
+  private def topLevelKeyword(sql: String, kw: String): Seq[Int] = {
+    val d = scan(sql)
+    def boundary(i: Int) = i < 0 || i >= sql.length || !isIdentChar(sql.charAt(i))
+    sql.indices.filter(i => d(i) == 0 && sql.regionMatches(true, i, kw, 0, kw.length) &&
+      boundary(i - 1) && boundary(i + kw.length))
   }
 
-  /** Split on `sep` at paren depth 0 outside string literals and quoted
-    * identifiers.
+  /** `sql` cut into the pieces between the `[start, end)` spans, which
+    * are dropped.
     */
+  private def cut(sql: String, spans: Seq[(Int, Int)]): Seq[String] =
+    (0 +: spans.map(_._2)).zip(spans.map(_._1) :+ sql.length).map { case (s, e) => sql.substring(s, e) }
+
+  /** Split on `sep` at paren depth 0 outside quoted regions. */
   private def splitTopLevel(sql: String, sep: Char): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0
-    var lit: Char = 0
-    var start = 0
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      val prev = lit
-      lit = litStep(lit, c)
-      if (prev == 0 && lit == 0) c match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case `sep` if depth == 0 =>
-          parts += sql.substring(start, i)
-          start = i + 1
-        case _ => ()
-      }
-      i += 1
-    }
-    parts += sql.substring(start)
-    parts.result()
+    val d = scan(sql)
+    cut(sql, sql.indices.filter(i => sql.charAt(i) == sep && d(i) == 0).map(i => (i, i + 1)))
   }
 
-  /** Split on top-level UNION [ALL] (outside parens and string literals).
-    * Returns (branches, separators) with `separators.length ==
-    * branches.length - 1`; each separator is "UNION" or "UNION ALL".
+  /** Split on top-level UNION [ALL]. Returns (branches, separators) with
+    * `separators.length == branches.length - 1`; each separator is "UNION"
+    * or "UNION ALL".
     */
   private def splitTopLevelUnion(sql: String): (Seq[String], Seq[String]) = {
-    val parts = Seq.newBuilder[String]
-    val seps = Seq.newBuilder[String]
-    var depth = 0
-    var lit: Char = 0
-    var start = 0
-    var i = 0
-    val upper = sql.toUpperCase
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      val prev = lit
-      lit = litStep(lit, c)
-      if (prev == 0 && lit == 0) c match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        // boundary check must treat '_' as part of an identifier (same as
-        // findTopLevelKeyword) or `col_union`/`union_dt` splits mid-name
-        case 'u' | 'U' if depth == 0 && upper.startsWith("UNION", i) &&
-            (i == 0 || !isIdentChar(sql.charAt(i - 1))) &&
-            (i + 5 >= sql.length || !isIdentChar(sql.charAt(i + 5))) =>
-          parts += sql.substring(start, i)
-          val rest = sql.substring(i + 5)
-          "(?is)^\\s*ALL\\b".r.findFirstIn(rest) match {
-            case Some(all) =>
-              seps += "UNION ALL"
-              start = i + 5 + all.length
-            case None =>
-              seps += "UNION"
-              start = i + 5
-          }
-          i = start - 1
-        case _ => ()
-      }
-      i += 1
+    val unions = topLevelKeyword(sql, "UNION").map { i =>
+      "(?is)^\\s*ALL\\b".r.findFirstIn(sql.substring(i + 5))
+        .fold((i, i + 5, "UNION"))(all => (i, i + 5 + all.length, "UNION ALL"))
     }
-    parts += sql.substring(start)
-    (parts.result(), seps.result())
+    (cut(sql, unions.map { case (s, e, _) => (s, e) }), unions.map(_._3))
   }
 
   /** Postgres `expr::type` cast → `CAST(expr AS type)`. Spark 4 parses simple
@@ -331,28 +272,10 @@ object Dialect {
     * not be name-qualified or cast-rewritten).
     */
   private def mapOutsideLiterals(sql: String)(f: String => String): String = {
-    val out = new StringBuilder
-    var i = 0
-    var segStart = 0
-    var lit: Char = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (lit == 0 && (c == '\'' || c == '"' || c == '`')) {
-        out.append(f(sql.substring(segStart, i)))
-        segStart = i
-        lit = c
-      } else if (lit != 0 && c == lit) {
-        // doubled delimiter ('' or "") escapes stay inside the region
-        if (i + 1 < sql.length && sql.charAt(i + 1) == lit) i += 1
-        else {
-          out.append(sql.substring(segStart, i + 1))
-          segStart = i + 1
-          lit = 0
-        }
-      }
-      i += 1
-    }
-    out.append(if (lit != 0) sql.substring(segStart) else f(sql.substring(segStart)))
-    out.toString
+    val quoted = scan(sql).map(_ == Quoted)
+    val bounds = 0 +: (1 until sql.length).filter(i => quoted(i) != quoted(i - 1)) :+ sql.length
+    bounds.zip(bounds.tail).map { case (s, e) =>
+      if (s < e && quoted(s)) sql.substring(s, e) else f(sql.substring(s, e))
+    }.mkString
   }
 }

@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
+import graft.DriverSession.jsonQuote
 import graft.rules.RuleParser.RuleParseException
 
 /** HTTP transport for [[Api]] — the reference serves `POST /api/translate`
@@ -91,9 +92,9 @@ object ApiServer {
         try {
           val res = Api.translateTable(spark, body, name, udfs, configure)
           val warnings = res.warnings.map(w =>
-            s"""{"loc":${w.loc.map(jstr).mkString("[", ",", "]")},"msg":${jstr(w.msg)},"type":${jstr(w.tpe)}}""")
+            s"""{"loc":${w.loc.map(jsonQuote).mkString("[", ",", "]")},"msg":${jsonQuote(w.msg)},"type":${jsonQuote(w.tpe)}}""")
           respond(ex, 200,
-            s"""{"script":${jstr(res.script)},"warnings":${warnings.mkString("[", ",", "]")}}""")
+            s"""{"script":${jsonQuote(res.script)},"warnings":${warnings.mkString("[", ",", "]")}}""")
         } catch {
           // invalid rule document → FastAPI's RequestValidationError shape
           case e @ (_: RuleParseException | _: IllegalArgumentException) =>
@@ -200,7 +201,7 @@ object ApiServer {
   }
 
   private def errJson(msg: String): String =
-    s"""{"detail":[{"loc":["body"],"msg":${jstr(msg)},"type":"value_error"}]}"""
+    s"""{"detail":[{"loc":["body"],"msg":${jsonQuote(msg)},"type":"value_error"}]}"""
 
   private def respond(ex: HttpExchange, status: Int, json: String): Unit = {
     val bytes = json.getBytes(UTF_8)
@@ -208,17 +209,6 @@ object ApiServer {
     ex.sendResponseHeaders(status, bytes.length)
     ex.getResponseBody.write(bytes)
   }
-
-  private def jstr(s: String): String =
-    Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }.mkString("\"", "", "\"")
 
   /** Standalone server: `graft.engine.ApiServer <port> [host]` on a local
     * session (host defaults to loopback — pass 0.0.0.0 to expose).

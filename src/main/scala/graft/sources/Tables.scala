@@ -203,7 +203,7 @@ object Tables {
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       }
       eventsTsNormalizer(tsType)(raw)
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else parquet(spark, s"$dir/$name.parquet")
 
   /** The `ts`-normalizing transform keyed on the type the parquet reader
     * observed for `events.ts` — ONE dispatch shared by the batch reader
@@ -261,8 +261,4 @@ object Tables {
     val target = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
-
-  /** Register every table as a temp view named exactly like its parquet file. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

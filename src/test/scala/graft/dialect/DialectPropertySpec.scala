@@ -16,26 +16,46 @@ object DialectPropertySpec extends Properties("Dialect") {
     for { h <- Gen.alphaLowerChar; t <- Gen.listOfN(5, Gen.alphaNumChar) }
       yield (h :: t).mkString
 
-  /** Atoms a quote-blind scanner would misparse. */
+  /** Atoms a quote-blind scanner would misparse, plus the quoting
+    * hazards of a char-by-char scan: doubled delimiters inside literals
+    * and identifiers, and a doubled quote beside two adjacent literals.
+    */
   private val nastyLit: Gen[String] = Gen.oneOf(
-    "' from x '", "'a,(b'", "'it''s, from (x)'", "'union all'", "'order by'")
+    "' from x '", "'a,(b'", "'it''s, from (x)'", "'union all'", "'order by'",
+    "'a''b'", "'a' 'b'", "'a''b' 'a' 'b'")
   private val nastyQuotedId: Gen[String] = Gen.oneOf(
-    "\"from\"", "\"a,b\"", "\"or(der\"", "\"wei)rd\"", "`from`", "`a, (order`")
+    "\"from\"", "\"a,b\"", "\"or(der\"", "\"wei)rd\"", "`from`", "`a, (order`",
+    "\"a\"\"b\"", "`a``b`")
 
   private val funcCall: Gen[String] =
     for { f <- Gen.oneOf("substring", "coalesce", "concat"); a <- ident; b <- ident }
       yield s"$f($a, $b, 1)"
 
+  /** A parenthesized subquery: its FROM, commas and literal sit below the
+    * select list's top level.
+    */
+  private val subquery: Gen[String] =
+    for { a <- ident; t <- ident; l <- nastyLit }
+      yield s"(select max($a), 1 from cerner.$t where $a = $l)"
+
   private val selectItem: Gen[String] = Gen.oneOf(
     ident,
     funcCall,
     for {
-      e <- Gen.oneOf(ident, funcCall, nastyLit)
+      e <- Gen.oneOf(ident, funcCall, nastyLit, subquery)
       a <- Gen.oneOf(ident, nastyQuotedId)
-    } yield s"$e as $a")
+    } yield s"$e as $a",
+    nastyLit)
 
   private val selectList: Gen[String] =
     Gen.chooseNum(1, 5).flatMap(n => Gen.listOfN(n, selectItem)).map(_.mkString(", "))
+
+  /** `prev` then keyword `kw`: glued on (`'x'from`) when `prev` ends with a
+    * quote, else one space between.
+    */
+  private def glue(prev: String, kw: String): Gen[String] =
+    if (prev.nonEmpty && "'\"`".contains(prev.last)) Gen.oneOf(s"$prev$kw", s"$prev $kw")
+    else Gen.const(s"$prev $kw")
 
   private val keys: Gen[String] = Gen.oneOf(ident, funcCall, nastyQuotedId)
 
@@ -43,17 +63,48 @@ object DialectPropertySpec extends Properties("Dialect") {
     for {
       k <- keys
       sel <- selectList
+      head <- glue(s"select distinct on ($k) $sel", "from")
       t <- ident
       where <- Gen.option(nastyLit.map(l => s" where tag = $l"))
-      order <- Gen.option(ident.map(o => s" order by $o"))
-    } yield s"select distinct on ($k) $sel from cerner.$t${where.getOrElse("")}${order.getOrElse("")}"
+      order <- Gen.option(ident)
+      sql <- order.fold(Gen.const(s"$head cerner.$t${where.getOrElse("")}"))(o =>
+        glue(s"$head cerner.$t${where.getOrElse("")}", s"order by $o"))
+    } yield sql
 
   private val plainSelect: Gen[String] =
     for {
       sel <- selectList
+      head <- glue(s"select $sel", "from")
       t <- ident
       where <- Gen.option(nastyLit.map(l => s" where tag = $l"))
-    } yield s"select $sel from cerner.$t${where.getOrElse("")}"
+    } yield s"$head cerner.$t${where.getOrElse("")}"
+
+  /** Branches joined by UNION / UNION ALL, glued to a branch's closing
+    * quote at random (`'x'union select …`).
+    */
+  private def unionOf(branches: Seq[String], sep: String): Gen[String] =
+    branches.tail.foldLeft(Gen.const(branches.head)) { (acc, b) =>
+      acc.flatMap(prev => glue(prev, s"$sep $b"))
+    }
+
+  /** Maximal runs of quoted chars, in order — the reference classification
+    * (a doubled delimiter scans as exit-then-reenter, so it stays in its
+    * run; an unterminated region runs to the end).
+    */
+  private def quotedRuns(s: String): Seq[String] = {
+    val runs = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    var lit: Char = 0
+    for (c <- s) {
+      val quoted = lit != 0 || c == '\'' || c == '"' || c == '`'
+      if (lit != 0) { if (c == lit) lit = 0 }
+      else if (quoted) lit = c
+      if (quoted) cur += c
+      else if (cur.nonEmpty) { runs += cur.result(); cur.clear() }
+    }
+    if (cur.nonEmpty) runs += cur.result()
+    runs.result()
+  }
 
   /** Paren balance outside quoted regions — the structural invariant every
     * rewrite must preserve (same delimiter semantics as the scanner).
@@ -92,17 +143,20 @@ object DialectPropertySpec extends Properties("Dialect") {
       out.contains(s"PARTITION BY $k") &&
         out.contains("WHERE __rn = 1") &&
         balancedOutsideQuotes(out) &&
-        // every quoted hazard present in the input survives verbatim
-        Seq("' from x '", "'a,(b'", "'it''s, from (x)'", "'union all'", "'order by'",
-          "\"from\"", "\"a,b\"", "\"or(der\"", "\"wei)rd\"", "`from`", "`a, (order`")
-          .filter(sql.contains(_)).forall(out.contains(_))
+        // every quoted run of the input survives verbatim
+        quotedRuns(sql).forall(quotedRuns(out).contains)
     }
 
+  private val unionQuery: Gen[(Seq[String], String, String)] =
+    for {
+      branches <- Gen.chooseNum(1, 4).flatMap(n =>
+        Gen.listOfN(n, Gen.oneOf(distinctOnSelect, plainSelect)))
+      sep <- Gen.oneOf("UNION", "UNION ALL")
+      sql <- unionOf(branches, sep)
+    } yield (branches, sep, sql)
+
   property("UNION branches rewrite independently; quoted UNION never splits") =
-    forAll(Gen.chooseNum(1, 4).flatMap(n =>
-      Gen.listOfN(n, Gen.oneOf(distinctOnSelect, plainSelect))),
-      Gen.oneOf("UNION", "UNION ALL")) { (branches, sep) =>
-      val sql = branches.mkString(s" $sep ")
+    forAll(unionQuery) { case (branches, sep, sql) =>
       val out = Dialect.rewriteDistinctOn(sql)
       val expected = branches.count(_.startsWith("select distinct on"))
       countOf(out, "WHERE __rn = 1") == expected &&
@@ -112,6 +166,18 @@ object DialectPropertySpec extends Properties("Dialect") {
 
   private def countOf(s: String, sub: String): Int =
     s.sliding(sub.length).count(_ == sub)
+
+  property("translate keeps every quoted run verbatim and in order, an unterminated tail included") =
+    forAll(for {
+      branches <- Gen.chooseNum(1, 3).flatMap(n => Gen.listOfN(n, plainSelect))
+      sql <- Gen.oneOf("UNION", "UNION ALL").flatMap(unionOf(branches, _))
+      tail <- Gen.option(Gen.oneOf("'it''s, from (x", "\"a\"\"b, (", "`a``b union", "'"))
+    } yield (sql + tail.fold("")(t => s" where tag = $t"), tail)) { case (sql, tail) =>
+      val out = Dialect.translate(sql)
+      quotedRuns(out) == quotedRuns(sql) &&
+        tail.forall(out.endsWith) &&
+        (tail.nonEmpty || balancedOutsideQuotes(out))
+    }
 
   property("translate keeps quoted regions verbatim while qualifying real refs") =
     forAll(

@@ -15,6 +15,13 @@ class DialectSpec extends AnyFunSuite {
       == "select baz.id from mapping_baz AS baz, temp_table_1 where baz.id = temp_table_1.id")
   }
 
+  test("qualify: schema.table.* keeps the star on the table alias") {
+    assert(Dialect.qualify("select cerner.foo.* from cerner.foo", Dialect.KnownSchemas)
+      == "select foo.* from cerner_foo AS foo")
+    assert(Dialect.qualify("select count(omop.x.*), omop.x.id from omop.x", Dialect.KnownSchemas)
+      == "select count(x.*), x.id from omop_x AS x")
+  }
+
   test("qualify: string literals untouched") {
     assert(Dialect.qualify("x = 'cerner.foo' and cerner.foo.y = 'it''s'", Dialect.KnownSchemas)
       == "x = 'cerner.foo' and foo.y = 'it''s'")

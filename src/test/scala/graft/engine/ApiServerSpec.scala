@@ -31,9 +31,10 @@ class ApiServerSpec extends AnyFunSuite {
     |"columns": [
     |  {"name": "year_of_birth", "tables": ["p"], "expression": "p.y"}]}""".stripMargin
 
-  private def startWithSource() = ApiServer.start(spark, port = 0, configure = { e =>
-    e.registerSource("cerner", "p", Seq((1L, 1980)).toDF("id", "y"))
-  })
+  private val withSource: Engine => Unit =
+    _.registerSource("cerner", "p", Seq((1L, 1980)).toDF("id", "y"))
+
+  private def startWithSource() = ApiServer.start(spark, port = 0, configure = withSource)
 
   test("POST /api/translate: rule in, script + warnings out; 422 on invalid; 405 on GET") {
     val server = startWithSource()
@@ -61,6 +62,20 @@ class ApiServerSpec extends AnyFunSuite {
         HttpRequest.newBuilder(URI.create(base)).GET().build(),
         HttpResponse.BodyHandlers.ofString())
       assert(get.statusCode() == 405)
+    } finally server.stop(0)
+  }
+
+  test("the 200 body parses as JSON whose script is Api.translateTable's, newlines and quotes included") {
+    val quoting = rule.replace("\"expression\": \"p.y\"",
+      "\"expression\": \"p.y + length('it''s') - length(\\\"ab\\\")\"")
+    val expected = Api.translateTable(spark, quoting, "person", configure = withSource).script
+    assert(expected.contains("\n") && expected.contains("'it''s'") && expected.contains("\"ab\""))
+    val server = startWithSource()
+    try {
+      val ok = post(s"http://localhost:${server.getAddress.getPort}/api/translate?name=person", quoting)
+      assert(ok.statusCode() == 200)
+      val body = new com.fasterxml.jackson.databind.ObjectMapper().readTree(ok.body())
+      assert(body.get("script").asText() == expected)
     } finally server.stop(0)
   }
 

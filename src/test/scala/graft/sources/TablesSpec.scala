@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,6 +34,15 @@ class TablesSpec extends AnyFunSuite {
     val before = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     assert(Tables.load(spark, "/root/testdata/sf0.001", "events").count() > 0)
     assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong") == before)
+  }
+
+  test("load reads every non-events table with the schema spark.read.parquet infers, starting no job") {
+    val dir = "/root/testdata/sf0.001"
+    for (name <- Tables.all if name != "events") {
+      val (df, jobs) = JobCounter.count(spark.sparkContext)(Tables.load(spark, dir, name))
+      assert(jobs == 0, name)
+      assert(df.schema == spark.read.parquet(s"$dir/$name.parquet").schema, name)
+    }
   }
 
   test("corpusSummary digest is doc_id-keyed: duplicate-text pairs cannot xor-cancel") {
