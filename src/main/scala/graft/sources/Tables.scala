@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr}
@@ -105,47 +106,49 @@ object Tables {
       d.toString
     })
 
-  /** Run `body` with `spark.sql.legacy.parquet.nanosAsLong` set, restoring
-    * the prior value after — the flag changes how EVERY parquet read in
-    * the session surfaces TIMESTAMP(NANOS) (raw long instead of a loud
-    * failure), so leaking it session-wide would inflict the
+  /** The observed schema of an events parquet `path` and its
+    * [[eventsTsNormalizer]], from one driver-side read of the first data
+    * file's footer ([[firstFooter]]) — no job. The footer is converted as
+    * Spark's inference converts it, with `spark.sql.legacy.parquet.nanosAsLong`
+    * set on a clone of the session conf only: the flag changes how EVERY
+    * parquet read in the session surfaces TIMESTAMP(NANOS) (raw long instead
+    * of a loud failure), so leaking it session-wide would inflict the
     * silently-guessed-unit failure on readers that have no normalizer.
-    * When the events file really IS nanos, [[load]] deliberately re-sets
-    * it un-scoped: the executing scan consults the conf again at task
-    * planning, and only that corpus needs it.
+    *
+    * Under the flag BOTH a nanos timestamp and a genuine raw BIGINT column
+    * surface as LongType, so the Spark type under-determines the unit — a
+    * regeneration shipping raw epoch-micros int64 would silently be divided
+    * by 1000 (the exact 1000× class this dispatch exists to stop). The same
+    * footer's logical-type annotation on `ts` is the ground truth; a LongType
+    * `ts` without the NANOS annotation is refused. When the file really IS
+    * nanos the flag is set on the session un-scoped: the executing scan
+    * consults the conf again at task planning, and only that corpus needs it.
     */
-  private def withNanosAsLong[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Does the parquet footer annotate `ts` as TIMESTAMP(NANOS)? Under
-    * nanosAsLong BOTH a nanos timestamp and a genuine raw BIGINT column
-    * surface as LongType in the Spark schema, so the Spark-observed type
-    * under-determines the unit — a regeneration shipping raw epoch-micros
-    * int64 would silently be divided by 1000 (the exact 1000× class this
-    * dispatch exists to stop). The footer's logical-type annotation is the
-    * ground truth; one footer read, no data pass.
-    */
-  private def tsNanosAnnotated(spark: SparkSession, path: String): Boolean = {
+  private def eventsSchema(spark: SparkSession, path: String): (StructType, DataFrame => DataFrame) = {
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
     // fail with the designed refusal: the unit sniff needs a footer
     val footer = firstFooter(spark, path).getOrElse(throw new IllegalArgumentException(
       s"events timestamp-unit sniff: no parquet data file under $path — " +
         "cannot inspect a footer to determine the ts unit"))
-    val schema = footer.getParquetMetadata.getFileMetaData.getSchema
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    schema.getType(schema.getFieldIndex("ts")).asPrimitiveType()
-      .getLogicalTypeAnnotation match {
-      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-        t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-      case _ => false
+    val conf = spark.sessionState.conf.clone()
+    conf.setConfString(nanosAsLong, "true")
+    val schema = ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(conf))
+    val tsType = schema("ts").dataType
+    if (tsType == LongType) {
+      val parquetSchema = footer.getParquetMetadata.getFileMetaData.getSchema
+      val nanos = parquetSchema.getType(parquetSchema.getFieldIndex("ts")).asPrimitiveType()
+        .getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      }
+      require(nanos,
+        s"events.ts in $path surfaced as BIGINT but the parquet footer " +
+          "does not annotate TIMESTAMP(NANOS) — a raw integer epoch " +
+          "column of unknown unit; refusing to guess (see eventsTsNormalizer)")
+      spark.conf.set(nanosAsLong, "true")
     }
+    (schema, eventsTsNormalizer(tsType))
   }
 
   /** The footer of the first data file of a parquet `path` (a file, a
@@ -185,25 +188,20 @@ object Tables {
       case None => spark.read.parquet(path)
     }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+  /** Table `name` of the corpus in `dir`, read with its footer schema and
+    * starting no job. The generator has shipped events.ts as
+    * TIMESTAMP(NANOS), TIMESTAMP_NTZ and TIMESTAMP(MICROS) across
+    * regenerations, so `events` dispatches on the type its footer declares
+    * ([[eventsSchema]]) and is normalized to TIMESTAMP — never an assumed
+    * unit; every other table is [[parquet]].
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
-      // the generator has shipped events.ts as TIMESTAMP(NANOS), TIMESTAMP_NTZ
-      // and TIMESTAMP(MICROS) across regenerations — dispatch on what the
-      // reader OBSERVES, never assume a unit
-      val path = s"$dir/$name.parquet"
-      val raw = withNanosAsLong(spark)(spark.read.parquet(path))
-      val tsType = raw.schema("ts").dataType
-      if (tsType == LongType) {
-        require(tsNanosAnnotated(spark, path),
-          s"events.ts in $path surfaced as BIGINT but the parquet footer " +
-            "does not annotate TIMESTAMP(NANOS) — a raw integer epoch " +
-            "column of unknown unit; refusing to guess (see eventsTsNormalizer)")
-        // the executing scan needs the legacy flag too — only a genuinely
-        // nanos corpus leaves it set
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      }
-      eventsTsNormalizer(tsType)(raw)
-    } else parquet(spark, s"$dir/$name.parquet")
+      val (schema, normalizeTs) = eventsSchema(spark, path)
+      normalizeTs(spark.read.schema(schema).parquet(path))
+    } else parquet(spark, path)
+  }
 
   /** The `ts`-normalizing transform keyed on the type the parquet reader
     * observed for `events.ts` — ONE dispatch shared by the batch reader
@@ -231,21 +229,13 @@ object Tables {
   }
 
   /** Observed on-disk schema of an events parquet file/directory plus the
-    * matching [[eventsTsNormalizer]]. The schema comes from a batch read —
-    * a footer sniff, no data pass — because file-stream sources cannot
-    * infer schemas: `readStream` forces exactly what the footer declares
-    * and applies the same normalizer the batch path uses.
+    * matching [[eventsTsNormalizer]] — the same footer read, refusal and
+    * conf handling as [[load]] ([[eventsSchema]]). File-stream sources
+    * cannot infer schemas: `readStream` forces exactly what the footer
+    * declares and applies the same normalizer the batch path uses.
     */
-  def eventsStreamSchema(spark: SparkSession, path: String): (StructType, DataFrame => DataFrame) = {
-    val observed = withNanosAsLong(spark)(spark.read.parquet(path)).schema
-    if (observed("ts").dataType == LongType) {
-      require(tsNanosAnnotated(spark, path),
-        s"events.ts in $path surfaced as BIGINT but the parquet footer " +
-          "does not annotate TIMESTAMP(NANOS) — refusing to guess the unit")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true") // see load
-    }
-    (observed, eventsTsNormalizer(observed("ts").dataType))
-  }
+  def eventsStreamSchema(spark: SparkSession, path: String): (StructType, DataFrame => DataFrame) =
+    eventsSchema(spark, path)
 
   /** [[load]] + guarantee at least the session's default parallelism in
     * partitions. Expression-heavy per-row pipelines (shingle hashing,

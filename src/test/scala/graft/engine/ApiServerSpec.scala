@@ -108,46 +108,128 @@ class ApiServerSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
-  test("a client trickling an oversized body delays other requests by less than 4 s") {
+  /** Milliseconds a valid POST takes; bounded, so a server wedged behind
+    * another client fails the case instead of hanging it.
+    */
+  private def timedPostMs(port: Int): Long = {
+    val t0 = System.nanoTime()
+    val r = post(s"http://localhost:$port/api/translate?name=person", rule,
+      java.time.Duration.ofSeconds(30))
+    assert(r.statusCode() == 200)
+    (System.nanoTime() - t0) / 1000000L
+  }
+
+  /** How much longer a valid POST takes while another client holds a raw
+    * connection that sent `head` and then, if `trickle`, sends a byte
+    * every 300 ms.
+    */
+  private def delayBehind(head: String, trickle: Boolean): Long = {
     val server = startWithSource()
     try {
       val port = server.getAddress.getPort
-      def timedPostMs(): Long = {
-        val t0 = System.nanoTime()
-        // bounded, so a server wedged behind the trickler fails the case
-        // instead of hanging it
-        val r = post(s"http://localhost:$port/api/translate?name=person", rule,
-          java.time.Duration.ofSeconds(30))
-        assert(r.statusCode() == 200)
-        (System.nanoTime() - t0) / 1000000L
-      }
-      timedPostMs()
-      val unloaded = timedPostMs()
-      // declares a body over the cap and sends its headers alone, then a
-      // byte every 300 ms: the server's drain sees no buffered body byte, so
-      // it runs to its deadline, and closing the exchange then waits on
-      // the rest of the body
+      timedPostMs(port)
+      val unloaded = timedPostMs(port)
       val sock = new java.net.Socket("localhost", port)
-      val trickler = new Thread(() =>
+      val client = new Thread(() =>
         try {
           val out = sock.getOutputStream
-          out.write((s"POST /api/translate HTTP/1.1\r\nHost: localhost\r\n" +
-            s"Content-Length: ${ApiServer.MaxBodyBytes + 1}\r\n\r\n").getBytes("UTF-8"))
+          out.write(head.getBytes("UTF-8"))
           out.flush()
-          while (true) { Thread.sleep(300); out.write('x'); out.flush() }
+          while (trickle) { Thread.sleep(300); out.write('x'); out.flush() }
         } catch { case _: java.io.IOException | _: InterruptedException => () })
-      trickler.setDaemon(true)
-      trickler.start()
+      client.setDaemon(true)
+      client.start()
       try {
-        Thread.sleep(600) // the trickling exchange now holds the server's one thread
-        val loaded = timedPostMs()
-        assert(loaded - unloaded < 4000,
-          s"a valid request waited ${loaded - unloaded} ms behind the trickling client")
+        Thread.sleep(600) // the slow exchange is now in the server
+        timedPostMs(port) - unloaded
       } finally {
         sock.close()
-        trickler.interrupt()
-        trickler.join(5000)
+        client.interrupt()
+        client.join(5000)
       }
     } finally server.stop(0)
+  }
+
+  private val oversizedHead = s"POST /api/translate HTTP/1.1\r\nHost: localhost\r\n" +
+    s"Content-Length: ${ApiServer.MaxBodyBytes + 1}\r\n\r\n"
+
+  test("a client trickling an oversized body delays other requests by less than 4 s") {
+    // declares a body over the cap, sends its headers alone and then a byte
+    // every 300 ms: its exchange answers 413 and reads the trickle on its
+    // own thread
+    val delay = delayBehind(oversizedHead, trickle = true)
+    assert(delay < 4000, s"a valid request waited $delay ms behind the trickling client")
+  }
+
+  test("a client stalled in its request line delays other requests by less than 4 s") {
+    val delay = delayBehind("POST /api/translate HTTP/1.1\r\n", trickle = false)
+    assert(delay < 4000, s"a valid request waited $delay ms behind the stalled client")
+  }
+
+  test("a client trickling an under-cap body delays other requests by less than 4 s") {
+    // 20 declared bytes at one per 300 ms: 6 s of body reads
+    val head = "POST /api/translate HTTP/1.1\r\nHost: localhost\r\nContent-Length: 20\r\n\r\n"
+    val delay = delayBehind(head, trickle = true)
+    assert(delay < 4000, s"a valid request waited $delay ms behind the trickling client")
+  }
+
+  test("an oversized request that sends only its headers reads 413 within 1 s") {
+    val server = ApiServer.start(spark, port = 0)
+    val sock = new java.net.Socket("localhost", server.getAddress.getPort)
+    try {
+      sock.setSoTimeout(5000) // a server that never answers fails the case
+      val t0 = System.nanoTime()
+      sock.getOutputStream.write(oversizedHead.getBytes("UTF-8"))
+      sock.getOutputStream.flush()
+      val status = new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream, "UTF-8")).readLine()
+      val ms = (System.nanoTime() - t0) / 1000000L
+      assert(status != null && status.startsWith("HTTP/1.1 413"), status)
+      assert(ms < 1000, s"the 413 took $ms ms")
+    } finally {
+      sock.close()
+      server.stop(0)
+    }
+  }
+
+  test("four requests in flight at once each get the script a sequential translate gives") {
+    val rules = (1 to 4).map(i => (s"person$i", rule.replace("\"p.y\"", s"\"p.y + $i\"")))
+    val expected = rules.map { case (name, text) =>
+      Api.translateTable(spark, text, name, configure = withSource).script }
+    val server = startWithSource()
+    try {
+      val base = s"http://localhost:${server.getAddress.getPort}/api/translate"
+      val client = HttpClient.newHttpClient()
+      val inFlight = rules.map { case (name, text) =>
+        client.sendAsync(
+          HttpRequest.newBuilder(URI.create(s"$base?name=$name"))
+            .timeout(java.time.Duration.ofMinutes(5))
+            .POST(HttpRequest.BodyPublishers.ofString(text)).build(),
+          HttpResponse.BodyHandlers.ofString())
+      }
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      inFlight.map(_.join()).zip(expected).zip(rules).foreach { case ((r, script), (name, _)) =>
+        assert(r.statusCode() == 200, name)
+        assert(mapper.readTree(r.body()).get("script").asText() == script, name)
+      }
+      assert(expected.distinct.size == 4)
+    } finally server.stop(0)
+  }
+
+  test("start, request and stop(0) leave no live non-daemon thread behind") {
+    import scala.jdk.CollectionConverters._
+    def nonDaemon(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    def cycle(): Unit = {
+      val server = startWithSource()
+      try assert(post(s"http://localhost:${server.getAddress.getPort}/api/translate", rule)
+        .statusCode() == 200)
+      finally server.stop(0)
+    }
+    cycle() // whatever a first translation starts once is not a leak
+    val before = nonDaemon()
+    (1 to 3).foreach(_ => cycle())
+    val leaked = nonDaemon() -- before
+    assert(leaked.isEmpty, s"threads left alive: ${leaked.map(_.getName).mkString(", ")}")
   }
 }
